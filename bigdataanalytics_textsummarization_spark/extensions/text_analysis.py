@@ -26,6 +26,7 @@ from ..functions import (
     pin,
     r6,
     split_bucket,
+    sql_values,
 )
 from ..io import input_bytes, load_table
 
@@ -41,6 +42,9 @@ LEXICONS: dict[str, tuple[str, ...]] = {
     "zh": ("de", "shi", "bu", "wo", "ni", "ta", "men", "zai"),
 }
 
+_LEX_ROWS = [(lang, w) for lang, words in LEXICONS.items() for w in words]
+_LEX_VALUES = sql_values(_LEX_ROWS)  # the DuckDB oracles' lexicon rows
+
 FINGERPRINT_WINDOW = 4  # winnowing window (w consecutive k-gram hashes)
 
 
@@ -53,15 +57,12 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     # VALUES LocalRelation (r17, the bm25 pattern): canonicalization-
-    # stable across builds, no driver RDD round-trip.  Values are
-    # ''-escaped (ADVICE r17): today's lexicon is plain ASCII, but a
-    # future entry containing a quote must not break the parse.
-    _vals = ", ".join(
-        f"('{lang}', '{w.replace(chr(39), chr(39) * 2)}')"
-        for lang, words in LEXICONS.items()
-        for w in words
+    # stable across builds, no driver RDD round-trip.  The oracle renders
+    # the same rows through the same quoting (sql_values).
+    lex = spark.sql(
+        f"SELECT cand_lang, w FROM VALUES {sql_values(_LEX_ROWS, spark_sql=True)}"
+        " AS v(cand_lang, w)"
     )
-    lex = spark.sql(f"SELECT cand_lang, w FROM VALUES {_vals} AS v(cand_lang, w)")
     toks = docs.select(
         "doc_id", F.explode(F.split(F.lower("text"), " ", -1)).alias("w")
     )
@@ -216,10 +217,6 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-
-_LEX_VALUES = ", ".join(
-    f"('{lang}', '{w}')" for lang, words in LEXICONS.items() for w in words
-)
 
 def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-based corpus split — the training-data staple.
@@ -2159,6 +2156,7 @@ BM25_QUERIES: list[tuple[int, str]] = [
     (3, "customer table filter"),
     (4, "sort merge join"),
 ]
+_BM25_TERMS = [(qid, t) for qid, q in BM25_QUERIES for t in q.split(" ")]
 
 
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2195,16 +2193,10 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a VALUES LocalRelation, not createDataFrame (r17): the parsed
     # literal plan is canonicalization-stable across builds (plan and
     # codegen caches hit), and nothing round-trips through a driver RDD.
-    # Values are ''-escaped (ADVICE r17): today's terms are plain ASCII,
-    # but a future query containing a quote must not break the parse.
-    _vals = ", ".join(
-        f"({qid}, '{t.replace(chr(39), chr(39) * 2)}')"
-        for qid, q in BM25_QUERIES
-        for t in q.split(" ")
-    )
+    # The oracle renders the same rows through the same quoting.
     qterms = spark.sql(
         "SELECT cast(query_id AS bigint) AS query_id, term "
-        f"FROM VALUES {_vals} AS v(query_id, term)"
+        f"FROM VALUES {sql_values(_BM25_TERMS, spark_sql=True)} AS v(query_id, term)"
     )
     qset = sorted({t for _, q in BM25_QUERIES for t in q.split(" ")})
     arr = F.split(F.lower("text"), " ", -1)
@@ -2296,14 +2288,10 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BM25_QUERY_VALUES = ", ".join(
-    f"({qid}, '{t}')" for qid, q in BM25_QUERIES for t in q.split(" ")
-)
-
 ORACLES["bm25_search"] = f"""
 WITH qterms AS (
   SELECT cast(query_id AS bigint) AS query_id, term
-  FROM (VALUES {_BM25_QUERY_VALUES}) v(query_id, term)
+  FROM (VALUES {sql_values(_BM25_TERMS)}) v(query_id, term)
 ),
 toks AS (
   SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term

@@ -45,9 +45,9 @@ _CHECKPOINTS: list[DataFrame] = []
 def pin(df: DataFrame) -> DataFrame:
     """persist() with an owner: registered for release_pins().
 
-    Idempotent: pinning a frame already in the registry is a no-op (the
-    LSA dispatch probe pins tfidf, then passes the same frame into
-    lsa_concepts_auto_from which pins its argument — ADVICE r7)."""
+    Idempotent: pinning a frame already in the registry is a no-op, so a
+    caller may pin a frame that the callee it hands it to pins again
+    (ADVICE r7)."""
     if any(df is p for p in _PINS):
         return df
     df = df.persist()
@@ -263,10 +263,29 @@ STOPWORDS: tuple[str, ...] = (
 )
 
 
+def sql_literal(v: str | int, spark_sql: bool = False) -> str:
+    """One SQL literal: strings quoted with ``''`` doubling, which Spark SQL
+    and DuckDB both read as a quote.  ``spark_sql=True`` also doubles
+    backslashes, which Spark SQL (not DuckDB) reads as escapes."""
+    if not isinstance(v, str):
+        return str(v)
+    if spark_sql:
+        v = v.replace("\\", "\\\\")
+    return "'" + v.replace("'", "''") + "'"
+
+
 def sql_string_list(values: tuple[str, ...] | list[str]) -> str:
     """Render a list of strings as a SQL ``('a','b',...)`` literal."""
-    quoted = ", ".join("'" + v.replace("'", "''") + "'" for v in values)
-    return f"({quoted})"
+    return "(" + ", ".join(sql_literal(v) for v in values) + ")"
+
+
+def sql_values(rows, spark_sql: bool = False) -> str:
+    """Render rows as the body of a SQL ``VALUES`` list, ``(1, 'a'), ...``:
+    one renderer for a Spark query and its DuckDB oracle."""
+    return ", ".join(
+        "(" + ", ".join(sql_literal(v, spark_sql) for v in row) + ")"
+        for row in rows
+    )
 
 
 STOPWORDS_SQL = sql_string_list(STOPWORDS)

@@ -12,7 +12,8 @@ driver (code:130-137) — its scalability cliff.  Here each *corpus*
 corpora with ``applyInPandas``: one Arrow batch per source, numpy SVD
 inside the worker, relational rows out.  A source whose (vocab x
 sentences) matrix would not fit one worker is SIZE-DISPATCHED
-(``lsa_concepts_auto``) to MLlib's distributed ``computeSVD`` instead, so
+(``lsa_concepts_auto_from``, through the gate in ``sizegate.py`` that
+TextRank shares) to MLlib's distributed ``computeSVD`` instead, so
 one grown corpus cannot reintroduce the reference's cliff; the per-corpus
 grouped path stays the plan for the common many-products-x-small-matrices
 workload.
@@ -25,16 +26,19 @@ rows-only oracle + algebraic property tests (tests/test_lsa.py).
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import sizegate
 from .functions import pin, r6
+from .sizegate import MAX_LOCAL_CELLS
 from .text import lsa_sentences, sentences, tokens_lsa
 
 K_CONCEPTS = 5
@@ -143,57 +147,50 @@ def lsa_concepts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsa_concepts_auto(spark, sf_dir)
 
 
-def _oversized_sources(tfidf: DataFrame, max_cells: int) -> tuple[list[str], int]:
-    """(sources whose dense matrix exceeds max_cells, total source count)
-    — one bounded aggregate (a row per corpus)."""
-    stats = (
-        tfidf.groupBy("source")
-        .agg(
-            F.countDistinct("sentence_id").alias("n_sent"),
-            F.countDistinct("word").alias("n_words"),
-        )
-        .collect()
-    )
-    big = sorted(
-        r["source"] for r in stats if r["n_sent"] * r["n_words"] > max_cells
-    )
-    return big, len(stats)
+def _lsa_cells(n_sent: Column, n_words: Column) -> Column:
+    """Dense (vocab x sentences) matrix size of one corpus."""
+    return n_sent * n_words
 
 
 def lsa_concepts_auto_from(
     spark: SparkSession,
     tfidf: DataFrame,
-    max_cells: int,
-    routing: tuple[list[str], int] | None = None,
+    max_cells: int = MAX_LOCAL_CELLS,
+    path: str | None = None,
 ) -> DataFrame:
-    """Dispatch core of :func:`lsa_concepts_auto` over any long-form
-    TF-IDF frame (test seam: a filtered frame + tiny ``max_cells`` forces
-    the distributed route without 20 full SVDs).  ``routing`` injects a
-    precomputed (big sources, n_sources) decision."""
-    tfidf = pin(tfidf)
-    big, n_sources = (
-        routing if routing is not None else _oversized_sources(tfidf, max_cells)
+    """Size-dispatched LSA over any long-form TF-IDF frame: applyInPandas
+    for sources whose (vocab x sentences) matrix fits a worker, the
+    distributed MLlib SVD for any source above ``max_cells``
+    (:mod:`.sizegate`).  ``path`` names the input the frame was read from,
+    so the routing is memoized per dataset; without it every call probes
+    (test seam: a filtered frame + tiny ``max_cells`` forces the
+    distributed route without 20 full SVDs).  The TF-IDF persist is
+    pin()-owned (release_pins()): the probe and both paths read it."""
+
+    def distributed(part: DataFrame, big: list[str]) -> DataFrame:
+        return functools.reduce(
+            DataFrame.unionByName,
+            [
+                _distributed_concepts(
+                    spark,
+                    part.filter(F.col("source") == src),
+                    k=K_CONCEPTS,
+                    source=src,
+                    kinds=("sentence", "keyword"),
+                )
+                for src in big
+            ],
+        )
+
+    return sizegate.dispatch(
+        pin(tfidf),
+        "lsa",
+        _lsa_cells,
+        lsa_concepts_from,
+        distributed,
+        max_cells,
+        path=path,
     )
-    parts: list[DataFrame] = []
-    if len(big) < n_sources:
-        small = (
-            tfidf if not big else tfidf.filter(~F.col("source").isin(big))
-        )
-        parts.append(lsa_concepts_from(small))
-    for src in big:
-        parts.append(
-            _distributed_concepts(
-                spark,
-                tfidf.filter(F.col("source") == src),
-                k=K_CONCEPTS,
-                source=src,
-                kinds=("sentence", "keyword"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def _distributed_concepts(
@@ -391,79 +388,22 @@ def lsa_concepts_distributed(
     )
 
 
-# Per-source matrices above this cell count (vocab x sentences) leave the
-# applyInPandas path: a dense float64 matrix of 4M cells is 32 MB inside
-# one Python worker — comfortably held; 100x that is the OOM cliff the
-# reference hits at code:134-142.  Oversized sources route to the
-# distributed MLlib SVD instead, so ONE grown corpus can no longer take
-# down a worker while the many-small-corpora common case keeps the cheap
-# one-Arrow-batch-per-source plan.
-MAX_LOCAL_CELLS = 4_000_000
-
-# (sf_dir, max_cells, dataset signature) -> (oversized sources, total
-# source count): dataset property, memoized like the PQ codebooks.  The
-# signature (documents file paths + sizes + mtimes) INVALIDATES the memo
-# when the underlying dataset is rewritten — without it a grown corpus
-# kept its stale small-matrix routing, which is the exact worker-OOM
-# cliff the dispatcher exists to avoid (ADVICE r6).
-_DISPATCH_CACHE: dict[tuple, tuple[list[str], int]] = {}
-
-
-def _dataset_signature(sf_dir: str) -> tuple:
-    """Cheap change-detection key for the documents table: (relpath,
-    size, mtime) per file — one os.stat walk, no data read."""
-    root = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isfile(root):
-        st = os.stat(root)
-        return ((os.path.basename(root), st.st_size, int(st.st_mtime_ns)),)
-    sig = []
-    for dirpath, _, names in sorted(os.walk(root)):
-        for n in sorted(names):
-            p = os.path.join(dirpath, n)
-            st = os.stat(p)
-            sig.append((os.path.relpath(p, root), st.st_size, int(st.st_mtime_ns)))
-    return tuple(sig)
-
-
 def lsa_concepts_auto(
     spark: SparkSession,
     sf_dir: str,
     max_cells: int = MAX_LOCAL_CELLS,
 ) -> DataFrame:
-    """Size-dispatched per-source LSA: applyInPandas for sources whose
-    (vocab x sentences) matrix fits a worker, distributed MLlib SVD for
-    any source above ``max_cells``.
-
-    The size probe is one aggregate over the tfidf frame (one row per
-    source — bounded driver materialization, like the corpus counts the
-    reference's loop takes per product).  Dispatch is all-or-nothing per
-    source, so both paths keep their exact single-path semantics and the
-    union is deterministic.  The routing decision is MEMOIZED per
-    (sf_dir, max_cells, dataset signature) — it is a property of the
-    dataset (computed at ANALYZE/write time in production), not of the
-    query call, so repeated calls skip the probe (~1 s per call at
-    sf0.1) while a rewritten dataset re-probes (stale entries for the
-    same (sf_dir, max_cells) are evicted, so the memo stays bounded).
-    The probe's tfidf persist is pin()-owned (release_pins()).
-    """
-    tfidf = _tfidf_long(spark, sf_dir)
-    sig = _dataset_signature(sf_dir)
-    if not sig:
-        # The os.stat walk could not enumerate the dataset (remote FS /
-        # object store path, or a dir layout os.walk cannot see): change
-        # detection is impossible, so do NOT memoize — probe every call
-        # rather than risk the stale-routing OOM cliff the signature
-        # exists to prevent (ADVICE r7).
-        return lsa_concepts_auto_from(
-            spark, tfidf, max_cells, routing=_oversized_sources(pin(tfidf), max_cells)
-        )
-    key = (sf_dir, max_cells, sig)
-    if key not in _DISPATCH_CACHE:
-        for k in [k for k in _DISPATCH_CACHE if k[:2] == key[:2]]:
-            del _DISPATCH_CACHE[k]
-        _DISPATCH_CACHE[key] = _oversized_sources(pin(tfidf), max_cells)
+    """Size-dispatched per-source LSA over the documents table
+    (:func:`lsa_concepts_auto_from`).  The size probe is one aggregate
+    over the tfidf frame (one row per source — bounded driver
+    materialization, like the corpus counts the reference's loop takes
+    per product), run once per dataset: repeated calls skip it (~1 s per
+    call at sf0.1) while a rewritten documents table re-probes."""
     return lsa_concepts_auto_from(
-        spark, tfidf, max_cells, routing=_DISPATCH_CACHE[key]
+        spark,
+        _tfidf_long(spark, sf_dir),
+        max_cells,
+        path=f"{sf_dir}/documents.parquet",
     )
 
 

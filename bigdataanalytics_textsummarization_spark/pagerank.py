@@ -10,23 +10,40 @@ Reference semantics preserved exactly (BigdataProjectCode.py:386-391,
   and vertices with no in-links vanish after the first aggregation — both
   reference behaviors kept for parity.
 
-Scale design: the contribution scatter is a shuffle join keyed on
-(source, src); contribution weights (w/Σw) are static, so they are computed
-once, cached, and reused across iterations.  Each iteration ends in a
-``localCheckpoint`` to cut the lineage the reference lets grow 5 joins deep
-(SURVEY.md §4.1).  On a cluster the rank table is tiny relative to edges, so
-AQE turns the per-iteration join into a broadcast automatically.
+Scale design: each product holds a few hundred sentences, so the ranking
+runs as one per-product numpy kernel (:func:`textrank_ranks_from`, the
+Chukonu pattern LSA's SVD already follows): one ``groupBy("source")
+.applyInPandas`` over the token stream builds the sentence x word 0/1
+matrix X, the similarity weights from X·Xᵀ and the five PageRank steps as
+matrix-vector products, while Spark keeps partitioning and shuffle.
+``textrank_ranks``, ``textrank_top5`` and ``reviews.textrank_review_summary``
+take it through :func:`textrank_ranks_auto_from`, which sends any product
+whose matrices exceed the shared size gate (``sizegate.py``, n² + n·V
+cells) to the join path instead.
+
+The join path (:func:`ranks_from` over ``graph.edges_from``) serves those
+oversized products, the ``tol`` early-stop variant and any caller with its
+own edge table: the contribution scatter is a shuffle join keyed on
+(source, src), and the static contribution weights (w/Σw) are computed
+once into a ``leaf()`` that every iteration reuses.  On a cluster the rank
+table is tiny relative to edges, so AQE turns the per-iteration join into
+a broadcast automatically.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from . import sizegate
 from .functions import _retire_ckpt, leaf, pin_checkpoint, r6, session_memo
-from .graph import EDGES_PREAMBLE, edges_raw
-from .text import sentences
+from .graph import EDGES_PREAMBLE, edges_from
+from .sizegate import MAX_LOCAL_CELLS, Routing
+from .text import sentences, tokens_textrank
 
 N_ITERATIONS = 5
 DAMPING = 0.85
@@ -155,11 +172,95 @@ def ranks_from(
     )
 
 
+def _rank_product(pdf: pd.DataFrame, iterations: int) -> pd.DataFrame:
+    """One product's token rows -> (source, sentence_id, rank), with the
+    join path's semantics (graph.edges_from + ranks_from) in dense numpy."""
+    sids, s_ix = np.unique(pdf["sentence_id"].to_numpy(), return_inverse=True)
+    _, w_ix = np.unique(pdf["word"].to_numpy(), return_inverse=True)
+    # n counts duplicate tokens (ntok); X is 0/1 on the distinct words
+    n_tok = np.bincount(s_ix, minlength=len(sids)).astype(np.float64)
+    x = np.zeros((len(sids), int(w_ix.max()) + 1))
+    x[s_ix, w_ix] = 1.0
+    w = x @ x.T  # isect(i, j) = shared distinct words
+    del x
+    np.fill_diagonal(w, 0.0)
+    # sentences with no edge never reach the inner joins
+    keep = w.any(axis=1)
+    if not keep.all():
+        w, sids, n_tok = w[np.ix_(keep, keep)], sids[keep], n_tok[keep]
+    # weight = isect / (1 + log2 n_src + log2 n_dst), log2 as Spark's
+    # StrictMath.log(x) / log(2); isect 0 -> weight 0, no edge
+    lg = np.log(n_tok) / np.log(2.0)
+    w /= (1.0 + lg)[:, None] + lg[None, :]
+    w /= w.sum(axis=1)[:, None]  # contrib_w = weight / out_w
+    rank = np.full(len(sids), INIT_RANK)
+    for _ in range(iterations):
+        rank = INIT_RANK + DAMPING * (w.T @ rank)
+    return pd.DataFrame(
+        {"source": pdf["source"].iloc[0], "sentence_id": sids, "rank": rank}
+    )
+
+
+def textrank_ranks_from(
+    toks: DataFrame, iterations: int = N_ITERATIONS
+) -> DataFrame:
+    """TextRank ranks (source, sentence_id, rank) from any (source,
+    sentence_id, word) token stream: one numpy kernel per product.  Holds
+    an n x n float64 matrix and an n x V 0/1 matrix per product (n
+    sentences, V distinct words); :func:`textrank_ranks_auto_from` keeps
+    that under the size gate."""
+    toks = toks.select("source", "sentence_id", "word")
+    schema = T.StructType(
+        [
+            toks.schema["source"],
+            toks.schema["sentence_id"],
+            T.StructField("rank", T.DoubleType()),
+        ]
+    )
+    return toks.groupBy("source").applyInPandas(
+        lambda pdf: _rank_product(pdf, iterations), schema=schema
+    )
+
+
+def _textrank_cells(n_sent: Column, n_words: Column) -> Column:
+    """Kernel matrices of one product: n x n weights + n x V tokens."""
+    return n_sent * n_sent + n_sent * n_words
+
+
+def textrank_ranks_auto_from(
+    toks: DataFrame,
+    iterations: int = N_ITERATIONS,
+    max_cells: int = MAX_LOCAL_CELLS,
+    routing: Routing | None = None,
+    path: str | None = None,
+) -> DataFrame:
+    """Size-dispatched TextRank ranks: the numpy kernel for products whose
+    n² + n·V cells fit ``max_cells``, the distributed edge join +
+    :func:`ranks_from` for the rest, unioned (``sizegate.py``).  ``path``
+    names the input the stream was read from, so the routing is memoized
+    per dataset; without it every call probes.  ``routing`` injects a
+    precomputed (big sources, n_sources) decision."""
+    return sizegate.dispatch(
+        toks,
+        "textrank",
+        _textrank_cells,
+        lambda part: textrank_ranks_from(part, iterations),
+        lambda part, big: ranks_from(edges_from(part), iterations),
+        max_cells,
+        path=path,
+        routing=routing,
+    )
+
+
 @session_memo
 def _ranks_raw(
     spark: SparkSession, sf_dir: str, iterations: int = N_ITERATIONS
 ) -> DataFrame:
-    return ranks_from(edges_raw(spark, sf_dir), iterations)
+    return textrank_ranks_auto_from(
+        tokens_textrank(spark, sf_dir),
+        iterations,
+        path=f"{sf_dir}/documents.parquet",
+    )
 
 
 def top_sentences_from(ranks: DataFrame, sent: DataFrame, k: int = 5) -> DataFrame:

@@ -8,12 +8,13 @@ BigdataProjectCode.py entry points §3.1-3.2 in SURVEY.md):
 - ``DataParser.parser()`` + ``TextRank.computeSummary()``
                                          -> here: :func:`textrank_review_summary`
 
-Both are thin compositions of the DataFrame cores (text/graph/pagerank/lsa),
-so the exact same operators serve the synthetic corpus, the reference's TSV
+Both are thin compositions of the DataFrame cores (text/pagerank/lsa), so
+the exact same operators serve the synthetic corpus, the reference's TSV
 reviews, or any (id, source, text) dataset.  One multi-file scan replaces
 the reference's per-file driver loop (code:261-263/417-419); everything
-downstream is a single distributed plan per pipeline — no collect(), no
-per-sentence lookup() jobs.
+downstream is a single distributed plan per pipeline — no per-sentence
+lookup() jobs, and the only collect is the size gate's one-row-per-product
+probe (``sizegate.py``), run once per review directory.
 """
 
 from __future__ import annotations
@@ -22,10 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import lemma_light, lemma_wordnet
-from .graph import edges_from
 from .io import read_reviews_tsv
-from .lsa import lsa_concepts_from, tfidf_long_from
-from .pagerank import ranks_from, top_sentences_from
+from .lsa import lsa_concepts_auto_from, tfidf_long_from
+from .pagerank import textrank_ranks_auto_from, top_sentences_from
 from .text import (
     lsa_sentences_from,
     sentences_from,
@@ -62,7 +62,7 @@ def lsa_review_summary(spark: SparkSession, path: str) -> DataFrame:
     sent = review_sentences(read_reviews_tsv(spark, path))
     toks = tokens_lsa_from(sent, lemma=_lemma())
     tfidf = tfidf_long_from(toks, lsa_sentences_from(sent))
-    concepts = lsa_concepts_from(tfidf)
+    concepts = lsa_concepts_auto_from(spark, tfidf, path=path)
     text = sent.select(F.col("sentence_id").alias("item"), "sentence")
     return (
         concepts.join(text, "item", "left")
@@ -126,6 +126,7 @@ def textrank_review_summary(spark: SparkSession, path: str, k: int = 5) -> DataF
     """Reference entry point 2: per-product TextRank top-k sentences
     (damping 0.85, 5 iterations, init 0.15 — reference semantics)."""
     sent = review_sentences(read_reviews_tsv(spark, path))
-    edges = edges_from(tokens_textrank_from(sent, lemma=_lemma()))
-    ranks = ranks_from(edges)
+    ranks = textrank_ranks_auto_from(
+        tokens_textrank_from(sent, lemma=_lemma()), path=path
+    )
     return top_sentences_from(ranks, sent, k=k)

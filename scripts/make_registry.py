@@ -4,7 +4,8 @@
 232+ queries across 16 modules outgrew README prose; this script derives
 the index from the live registries so it cannot go stale by hand-editing:
 
-- name -> defining module:line (via inspect on the registered callable)
+- name -> defining module:function (via inspect on the registered
+  callable; no line number, so moving code cannot stale the index)
 - gate type: SQL (DuckDB value-hash oracle) or rows-only
 - last green round (parsed from CORRECTNESS_r*.json, same green rule as
   scripts/check_recert.py)
@@ -92,7 +93,6 @@ def render() -> str:
     for name in sorted(queries):
         fn = queries[name]
         src = os.path.relpath(inspect.getsourcefile(fn), REPO)
-        line = inspect.getsourcelines(fn)[1]
         gate = "SQL" if name in oracles else "rows-only"
         green = f"r{greens[name]}" if name in greens else "—"
         tiers = "+".join(
@@ -106,7 +106,7 @@ def render() -> str:
         ) or "—"
         win = "staged" if name in staged else ""
         lines.append(
-            f"| {name} | {src}:{line} | {gate} | {green} | {tiers} | {win} |"
+            f"| {name} | {src}:{fn.__qualname__} | {gate} | {green} | {tiers} | {win} |"
         )
     lines.append("")
     return "\n".join(lines)

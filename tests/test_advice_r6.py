@@ -99,7 +99,7 @@ def test_knn_graph_recall_clean_verdict_on_degenerate_corpus(spark, tmp_path):
 def test_lsa_dispatch_memo_invalidates_on_dataset_rewrite(
     spark, tmp_path_factory
 ):
-    from bigdataanalytics_textsummarization_spark import lsa
+    from bigdataanalytics_textsummarization_spark import lsa, sizegate
     from tests.conftest import write_docs
 
     texts = [
@@ -110,14 +110,16 @@ def test_lsa_dispatch_memo_invalidates_on_dataset_rewrite(
         "mention rivers foxes dogs and summarization once more for weight.",
     ]
     d = write_docs(tmp_path_factory, "lsa_memo", texts)
-    lsa._DISPATCH_CACHE.clear()
+    # the LSA routing of this dataset's documents table
+    mine = (f"{d}/documents.parquet", "lsa")
+    sizegate._DISPATCH_CACHE.clear()
     lsa.lsa_concepts_auto(spark, d).count()
-    keys1 = [k for k in lsa._DISPATCH_CACHE if k[0] == d]
+    keys1 = [k for k in sizegate._DISPATCH_CACHE if k[:2] == mine]
     assert len(keys1) == 1
 
     # same dataset -> memo hit, no new key
     lsa.lsa_concepts_auto(spark, d).count()
-    assert [k for k in lsa._DISPATCH_CACHE if k[0] == d] == keys1
+    assert [k for k in sizegate._DISPATCH_CACHE if k[:2] == mine] == keys1
 
     # rewrite the dataset in place -> signature changes -> re-probe,
     # and the stale entry is EVICTED (memo stays bounded per dataset)
@@ -142,7 +144,7 @@ def test_lsa_dispatch_memo_invalidates_on_dataset_rewrite(
     spark.catalog.clearCache()  # drop any cached scan of the old file
 
     lsa.lsa_concepts_auto(spark, d).count()
-    keys2 = [k for k in lsa._DISPATCH_CACHE if k[0] == d]
+    keys2 = [k for k in sizegate._DISPATCH_CACHE if k[:2] == mine]
     assert len(keys2) == 1 and keys2 != keys1
 
 

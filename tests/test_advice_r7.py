@@ -22,7 +22,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from bigdataanalytics_textsummarization_spark import lsa, pagerank
+from bigdataanalytics_textsummarization_spark import graph, lsa, pagerank, sizegate
 from bigdataanalytics_textsummarization_spark.functions import (
     _CHECKPOINTS,
     _PINS,
@@ -58,7 +58,9 @@ def test_checkpoint_storage_released_after_ranks_from(spark):
     no longer waits on GC + ContextCleaner."""
     release_pins()
     before = _persistent_ids(spark)
-    ranks = pagerank.textrank_ranks(spark, SF_DIR)
+    # the join path: textrank_ranks takes the per-product kernel, which
+    # checkpoints nothing
+    ranks = pagerank.ranks_from(graph.edges_raw(spark, SF_DIR))
     assert ranks.count() > 0  # materializes the pinned cache + checkpoint
     during = _persistent_ids(spark)
     assert len(during) > len(before)  # the pin and/or checkpoint RDD is live
@@ -87,24 +89,24 @@ def test_lsa_memo_not_polluted_when_signature_unenumerable(spark, monkeypatch):
     probes: list[int] = []
     sentinel = ([], 3)
 
-    monkeypatch.setattr(lsa, "_dataset_signature", lambda sf_dir: ())
+    monkeypatch.setattr(sizegate, "_dataset_signature", lambda path: ())
     monkeypatch.setattr(lsa, "_tfidf_long", lambda s, d: spark.range(1))
     monkeypatch.setattr(
-        lsa, "_oversized_sources",
-        lambda tfidf, mc: (probes.append(1), sentinel)[1],
+        sizegate, "_oversized_sources",
+        lambda frame, mc, cells: (probes.append(1), sentinel)[1],
     )
     captured: list = []
     monkeypatch.setattr(
-        lsa, "lsa_concepts_auto_from",
-        lambda s, t, mc, routing=None: (captured.append(routing), t)[1],
+        sizegate, "split",
+        lambda frame, routing, local, fallback: (captured.append(routing), frame)[1],
     )
-    memo_before = dict(lsa._DISPATCH_CACHE)
+    memo_before = dict(sizegate._DISPATCH_CACHE)
     try:
         lsa.lsa_concepts_auto(spark, "/no/such/remote/path")
         lsa.lsa_concepts_auto(spark, "/no/such/remote/path")
     finally:
         release_pins()
-    assert lsa._DISPATCH_CACHE == memo_before  # nothing memoized
+    assert sizegate._DISPATCH_CACHE == memo_before  # nothing memoized
     assert len(probes) == 2  # probed on EVERY call
     assert captured == [sentinel, sentinel]
 

@@ -655,3 +655,20 @@ def test_dsir_target_equals_corpus_is_exactly_neutral(texts):
     out = con.sql(cu.ORACLES["dsir_weights"]).df()
     assert (out["logw"] == 0.0).all()
     assert (out["logw_per_token"] == 0.0).all()
+
+
+def test_sql_values_round_trip_in_spark_and_duckdb(spark):
+    """lang_id and bm25_search render their literal rows for Spark and
+    for the DuckDB oracle through one helper: quotes and backslashes
+    must come back unchanged from both engines."""
+    from bigdataanalytics_textsummarization_spark.functions import sql_values
+
+    rows = [(0, "it's"), (1, "back\\slash"), (2, "''"), (3, "plain")]
+    got = spark.sql(
+        f"SELECT * FROM VALUES {sql_values(rows, spark_sql=True)} AS v(k, s)"
+    ).collect()
+    assert sorted(tuple(r) for r in got) == rows
+    want = duckdb.sql(
+        f"SELECT * FROM (VALUES {sql_values(rows)}) v(k, s) ORDER BY k"
+    ).fetchall()
+    assert want == rows
