@@ -42,7 +42,7 @@ from pyspark.sql.window import Window
 from . import sizegate
 from .functions import _retire_ckpt, leaf, pin_checkpoint, r6, session_memo
 from .graph import EDGES_PREAMBLE, edges_from
-from .sizegate import MAX_LOCAL_CELLS, Routing
+from .sizegate import MAX_LOCAL_CELLS
 from .text import sentences, tokens_textrank
 
 N_ITERATIONS = 5
@@ -174,7 +174,9 @@ def ranks_from(
 
 def _rank_product(pdf: pd.DataFrame, iterations: int) -> pd.DataFrame:
     """One product's token rows -> (source, sentence_id, rank), with the
-    join path's semantics (graph.edges_from + ranks_from) in dense numpy."""
+    join path's semantics (graph.edges_from + ranks_from) in dense numpy.
+    Peak is the n x V token matrix beside the n x n weights, the cells the
+    size gate budgets; every later step rewrites the weights in place."""
     sids, s_ix = np.unique(pdf["sentence_id"].to_numpy(), return_inverse=True)
     _, w_ix = np.unique(pdf["word"].to_numpy(), return_inverse=True)
     # n counts duplicate tokens (ntok); X is 0/1 on the distinct words
@@ -184,20 +186,26 @@ def _rank_product(pdf: pd.DataFrame, iterations: int) -> pd.DataFrame:
     w = x @ x.T  # isect(i, j) = shared distinct words
     del x
     np.fill_diagonal(w, 0.0)
-    # sentences with no edge never reach the inner joins
-    keep = w.any(axis=1)
-    if not keep.all():
-        w, sids, n_tok = w[np.ix_(keep, keep)], sids[keep], n_tok[keep]
     # weight = isect / (1 + log2 n_src + log2 n_dst), log2 as Spark's
     # StrictMath.log(x) / log(2); isect 0 -> weight 0, no edge
     lg = np.log(n_tok) / np.log(2.0)
-    w /= (1.0 + lg)[:, None] + lg[None, :]
-    w /= w.sum(axis=1)[:, None]  # contrib_w = weight / out_w
+    for i, row in enumerate(w):
+        row /= 1.0 + lg[i] + lg
+    out_w = w.sum(axis=1)
+    # sentences with no edge never reach the inner joins: their rows and
+    # columns are all zero, so they add nothing to any rank, and they are
+    # left out of the output
+    keep = out_w > 0
+    w /= np.where(keep, out_w, 1.0)[:, None]  # contrib_w = weight / out_w
     rank = np.full(len(sids), INIT_RANK)
     for _ in range(iterations):
         rank = INIT_RANK + DAMPING * (w.T @ rank)
     return pd.DataFrame(
-        {"source": pdf["source"].iloc[0], "sentence_id": sids, "rank": rank}
+        {
+            "source": pdf["source"].iloc[0],
+            "sentence_id": sids[keep],
+            "rank": rank[keep],
+        }
     )
 
 
@@ -231,15 +239,13 @@ def textrank_ranks_auto_from(
     toks: DataFrame,
     iterations: int = N_ITERATIONS,
     max_cells: int = MAX_LOCAL_CELLS,
-    routing: Routing | None = None,
     path: str | None = None,
 ) -> DataFrame:
     """Size-dispatched TextRank ranks: the numpy kernel for products whose
     n² + n·V cells fit ``max_cells``, the distributed edge join +
     :func:`ranks_from` for the rest, unioned (``sizegate.py``).  ``path``
     names the input the stream was read from, so the routing is memoized
-    per dataset; without it every call probes.  ``routing`` injects a
-    precomputed (big sources, n_sources) decision."""
+    per dataset; without it every call probes."""
     return sizegate.dispatch(
         toks,
         "textrank",
@@ -248,7 +254,6 @@ def textrank_ranks_auto_from(
         lambda part, big: ranks_from(edges_from(part), iterations),
         max_cells,
         path=path,
-        routing=routing,
     )
 
 

@@ -44,9 +44,12 @@ _DISPATCH_CACHE: dict[tuple, Routing] = {}
 def _dataset_signature(path: str) -> tuple:
     """Cheap change-detection key for any input file, directory or glob:
     (path, size, mtime) per file, one os.stat walk, no data read.  Empty
-    when nothing can be enumerated (remote FS, object store, missing)."""
+    when nothing can be enumerated (remote FS, object store, missing).
+    A path that exists is taken as written, so a directory named like
+    ``run[1]`` is never read as a pattern matching some other input."""
     sig = []
-    for top in sorted(glob.glob(path)):
+    tops = [path] if os.path.exists(path) else sorted(glob.glob(path))
+    for top in tops:
         files = [top] if os.path.isfile(top) else [
             os.path.join(d, n)
             for d, _, names in sorted(os.walk(top))
@@ -123,10 +126,7 @@ def dispatch(
     fallback: Callable[[DataFrame, list[str]], DataFrame],
     max_cells: int = MAX_LOCAL_CELLS,
     path: str | None = None,
-    routing: Routing | None = None,
 ) -> DataFrame:
-    """Route ``frame`` (``routing`` injects a precomputed decision) and
-    run each part on its path."""
-    if routing is None:
-        routing = route(frame, kernel, cells, max_cells, path)
+    """Route ``frame`` and run each part on its path."""
+    routing = route(frame, kernel, cells, max_cells, path)
     return split(frame, routing, local, fallback)

@@ -12,8 +12,10 @@ from __future__ import annotations
 
 import math
 import os
+import tracemalloc
 from collections import Counter, defaultdict
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -111,9 +113,33 @@ def test_kernel_matches_join_path(spark, corpus):
 
 def test_mixed_routing_equals_all_kernel(spark, corpus):
     _, toks = corpus
-    sources = sorted(r["source"] for r in toks.select("source").distinct().collect())
-    assert len(sources) >= 2
-    mixed_df = pagerank.textrank_ranks_auto_from(toks, routing=([sources[0]], len(sources)))
+    # the review fixture's products are the same size; a product made of
+    # half of one product's sentences is smaller than every other
+    first = toks.agg(F.min("source")).first()[0]
+    half = (
+        toks.filter((F.col("source") == first) & (F.crc32("sentence_id") % 2 == 0))
+        .withColumn("source", F.lit("~half"))
+    )
+    toks = toks.unionByName(half.select(*toks.columns))
+    cells = sorted(
+        {
+            r["cells"]
+            for r in toks.groupBy("source")
+            .agg(
+                pagerank._textrank_cells(
+                    F.countDistinct("sentence_id"), F.countDistinct("word")
+                ).alias("cells")
+            )
+            .collect()
+        }
+    )
+    assert len(cells) >= 2
+    # a budget between the two smallest products' cells keeps the
+    # smallest on the kernel and sends the rest to the join path
+    cut = (cells[0] + cells[1]) // 2
+    big, n_sources = sizegate._oversized_sources(toks, cut, pagerank._textrank_cells)
+    assert 0 < len(big) < n_sources
+    mixed_df = pagerank.textrank_ranks_auto_from(toks, max_cells=cut)
     plan = _plan(mixed_df)
     assert "FlatMapGroupsInPandas" in plan and "Union" in plan
     mixed = _ranks(mixed_df)
@@ -219,6 +245,46 @@ def test_signature_tracks_files_and_globs(tmp_path):
     (d / "b.txt").write_text("yy")
     assert len(sizegate._dataset_signature(str(d))) == 2
     assert sizegate._dataset_signature(str(tmp_path / "missing")) == ()
+
+
+def test_signature_takes_an_existing_path_literally(tmp_path):
+    """A directory named like a glob pattern is read as written: the
+    pattern run[1] would match run1, whose rewrites must not stand in for
+    the real input's."""
+    real, lookalike = tmp_path / "run[1]", tmp_path / "run1"
+    for d in (real, lookalike):
+        d.mkdir()
+        (d / "reviews.txt").write_text("x")
+    sig = sizegate._dataset_signature(str(real))
+    assert [p for p, *_ in sig] == [str(real / "reviews.txt")]
+    (real / "reviews.txt").write_text("grown")
+    assert sizegate._dataset_signature(str(real)) != sig
+    # a path that does not exist is still expanded as a glob
+    assert sizegate._dataset_signature(str(tmp_path / "run[1]x")) == ()
+    assert [p for p, *_ in sizegate._dataset_signature(str(tmp_path / "run?"))] == [
+        str(lookalike / "reviews.txt")
+    ]
+
+
+def test_kernel_peak_stays_within_the_budgeted_cells():
+    """The kernel's numpy peak is the n² + n·V cells the gate budgets:
+    edgeless sentences are kept in place and every step after X·Xᵀ
+    rewrites the weights in place (no n x n copy or temporary)."""
+    rows = [
+        ("p", f"s{i:04d}", f"w{k}")
+        for i in range(600)
+        for k in {i % 200, (i * 7 + 3) % 200, (i * 13 + 5) % 200}
+    ] + [("p", f"z{j}", f"lone{j}") for j in range(10)]  # no shared word
+    pdf = pd.DataFrame(rows, columns=["source", "sentence_id", "word"])
+    n, v = pdf["sentence_id"].nunique(), pdf["word"].nunique()
+    tracemalloc.start()
+    try:
+        out = pagerank._rank_product(pdf, pagerank.N_ITERATIONS)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert len(out) == 600 and not out["sentence_id"].str.startswith("z").any()
+    assert peak <= 1.05 * 8 * (n * n + n * v)
 
 
 def test_ranks_raw_takes_the_kernel(spark):
