@@ -410,6 +410,9 @@ _NOUN_EXC = {
     "linguistics", "measles": "measles", "diabetes": "diabetes",
     "rabies": "rabies", "molasses": "molasses", "shambles": "shambles",
 }
+_NOUN_EXC_MAP_SQL = "map(" + ", ".join(
+    sql_literal(x, spark_sql=True) for kv in _NOUN_EXC.items() for x in kv
+) + ")"
 
 
 def lemmatize_noun(w: str) -> str:
@@ -440,10 +443,10 @@ def lemma_wordnet(col: Column) -> Column:
     Exceptions resolve through a broadcast map literal, rules through a
     CASE chain — all JVM-side (SURVEY §2.7 F6 sketched a pandas_udf; an
     expression does the same work with no Python worker round-trip).
+    The map is parsed from one SQL literal: a ``create_map`` of per-key
+    ``F.lit`` columns cost ~1,000 Py4J round trips per call.
     """
-    exc = F.create_map(
-        *[F.lit(x) for kv in _NOUN_EXC.items() for x in kv]
-    )
+    exc = F.expr(_NOUN_EXC_MAP_SQL)
     rules = (
         F.when(
             col.rlike("ies$") & (F.length(col) > 4),

@@ -56,6 +56,11 @@ def get_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # compiled whole-stage classes, cached per JVM: one review
+        # summarization pass compiles ~80, so the default 100 entries
+        # evicted and recompiled them on every later pass (static conf:
+        # it takes effect in the session that starts the JVM)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config(

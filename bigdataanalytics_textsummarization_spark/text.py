@@ -28,7 +28,6 @@ from pyspark.sql.window import Window
 
 from .functions import (
     session_memo,
-    STOPWORDS,
     STOPWORDS_SQL,
     lemma_light,
     lemma_sql,
@@ -118,10 +117,13 @@ def _tokenize(
         "source",
         F.explode(F.expr("regexp_extract_all(sentence, '[A-Za-z]+', 0)")).alias("raw"),
     )
+    # the stopword test is parsed from one SQL literal list, not built
+    # from one F.lit per stopword (~700 Py4J round trips per call)
     return (
         raw.withColumn("lw", F.lower("raw"))
         .filter(
-            (F.length("raw") >= F.lit(min_raw_len)) & (~F.col("lw").isin(*STOPWORDS))
+            (F.length("raw") >= F.lit(min_raw_len))
+            & F.expr(f"lw NOT IN {STOPWORDS_SQL}")
         )
         .select(
             "sentence_id",

@@ -617,3 +617,37 @@ def test_self_bleu_ring_equi_joins_only(spark):
     assert "Generate" not in plan
     after = plan.split("MapInPandas")[-1]
     assert "Exchange" not in after
+
+
+def test_tokenizer_construction_stays_off_py4j(spark):
+    """Building a WordNet-lemma token stream must not cost one Py4J round
+    trip per stopword or exception literal: the stopword list and the
+    exception map are each parsed from one SQL literal."""
+    import py4j.clientserver as cs
+
+    from bigdataanalytics_textsummarization_spark.functions import lemma_wordnet
+    from bigdataanalytics_textsummarization_spark.text import tokens_textrank_from
+
+    sent = spark.createDataFrame(
+        [("d_0", "d", 0, "some words here", "s")],
+        "sentence_id string, doc_id string, pos long, sentence string, source string",
+    )
+    calls = [0]
+    orig = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return orig(self, command)
+
+    cs.ClientServerConnection.send_command = counting
+    try:
+        tokens_textrank_from(sent, lemma=lemma_wordnet)
+    finally:
+        cs.ClientServerConnection.send_command = orig
+    # ~700; one F.lit per stopword and map entry made it ~2,500
+    assert calls[0] < 1200, calls[0]
+
+
+def test_session_codegen_cache_holds_a_review_pass(spark):
+    # a cold review summarization pass compiles ~80 whole-stage classes
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 1000
