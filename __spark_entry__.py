@@ -6,18 +6,24 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash -> CORRECTNESS_r{N}.json).
 
 All implementations live in ``bigdataanalytics_textsummarization_spark/``;
-this module only aggregates their QUERIES/ORACLES registries.
+this module only aggregates their QUERIES/ORACLES registries and orders
+them so the driver's budget-capped window reaches the queries certified
+longest ago first (``window_order`` over the committed round artifacts).
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
 
 from bigdataanalytics_textsummarization_spark import (  # noqa: E402
     graph,
@@ -42,18 +48,14 @@ from bigdataanalytics_textsummarization_spark.streaming import (  # noqa: E402
     events as streaming_events,
 )
 
-# Ordered so a budget-capped driver reaches everything that still needs a
-# fresh row.  Round-5 rotation: every query has had a green row in some
-# round (r4 VERDICT), so the window now REFRESHES the oldest standing
-# rows (r1/r2: text, graph, pagerank, relational, rouge, dedup) while
-# recently-certified modules rotate to the back.
+# queries() orders the merged registries oldest last green first (window_order).
 _MODULES = [
-    text,  # r2 rows, never refreshed
-    graph,  # r1 rows ("graph family" refresh per r4 VERDICT task 8)
-    pagerank,  # r1 rows (textrank_*)
-    relational,  # r1/r2 rows
-    rouge,  # r2 rows
-    dedup,  # r2 rows
+    text,
+    graph,
+    pagerank,
+    relational,
+    rouge,
+    dedup,
     streaming_events,
     multimodal,
     curation,
@@ -63,564 +65,47 @@ _MODULES = [
     lsa,
     text_analysis,
     relational_ext,
-    tpch,  # refreshed in r4 (was first in line)
+    tpch,
 ]
 
-# Individual queries that MUST land inside the driver's 50-query budget
-# window this round, ahead of their module's position: new this round or
-# changed-since-last-green (as mechanically enforced by
-# scripts/check_recert.py — it diffs each query's cross-module AST
-# closure against the tree its last green artifact was committed on).
-#
-# Round-17 window (VERDICT r16 tasks 3+5-6): 50 slots = (a) the
-# never-certified r17 queries — wer_corpus (the micro-average corpus
-# roll-up completing the eval family's pair/corpus symmetry), the CER
-# pair (below), and
-# summary_eval (the eval metrics scored on ENGINE-PRODUCED summaries:
-# LSA summary vs TextRank top-5 per source, the reference's own
-# machine-vs-machine pseudo-golden pattern M4/M5) — staged beside the
-# three eval rows whose kernels were refactored into *_from variants
-# this round (wer_pairs — its oracle also gained the shared-CTE
-# extraction, whitespace-only; bleu_pairs, bleu_corpus — component
-# kernel now routes through _bleu_components_from; check_recert flags
-# none of them, re-staged as prudence, all verified ALL MATCH at
-# sf0.001 + sf0.01 by driver_sim before staging), then (b) the ENTIRE
-# r11-era freshness queue (26 names, the oldest standing greens) and
-# (c) the alphabetically-first 17 of the 43 r12-era greens (the
-# events family groups naturally; events_sliding — the r16 bench
-# anomaly row — re-certifies here).  Late r17 adds the CER pair
-# (cer_pairs/cer_corpus — the character-level WER twin, never
-# certified; ALL MATCH at sf0.001 + sf0.01 by driver_sim before
-# staging), each taking the slot of an alphabetically-last r12-era
-# name (knn_accuracy and lineitem_stats stay queued for r18, the
-# rotation loses nothing).  Later still, the GLEU pair
-# (gleu_pairs/gleu_corpus — min(precision, recall) over the pooled
-# 1..4-gram bag, a pure expression over the certified BLEU integer
-# components) and rouge_su4 (skip-bigram+unigram ROUGE, max gap 4)
-# take the slots of the three alphabetically-last r12-era names
-# (events_in_sessions, events_sliding, gopher_rules rejoin the r18
-# queue — events_sliding's r17 interleaved A/B already refuted the
-# r16 bench anomaly, so nothing is lost by deferring its recert), and
-# eval_report (the one-row suite composing the six certified corpus
-# oracles), eval_sweep (its per-source M6-pattern twin), and the
-# self-BLEU pair (the Texygen corpus-diversity statistic — the
-# family's first multi-reference BLEU, K=3 ring neighbors) take the
-# slots of events_dedup, events_by_segment, embedding_quantize and
-# event_transitions the same way; wer_ingest (the eval member of the
-# ingest-gate family — stream-static WER admission with an integer
-# keep decision) takes dsir_weights' slot last.  7+8+26+9 = exactly
-# the 50-slot budget; after r17 certifies, the oldest standing green
-# is r12-era and the 34 r12-era names past the cut lead the r18
-# rotation.
-_PRIORITY_R17 = [
-    # (a) never certified + the refactored eval family (shared pair
-    # leafs; summary_eval composes the lsa/textrank plans)
-    "wer_pairs",
-    "wer_corpus",
-    "cer_pairs",
-    "cer_corpus",
-    "bleu_pairs",
-    "bleu_corpus",
-    "summary_eval",
-    "gleu_pairs",
-    "gleu_corpus",
-    "rouge_su4",
-    "eval_report",
-    "eval_sweep",
-    "self_bleu_docs",
-    "self_bleu_corpus",
-    "wer_ingest",
-    # (b) the full r11-era queue, alphabetical
-    "compression_ratio",
-    "contamination_check",
-    "contrastive_pairs",
-    "corpus_diversity",
-    "corpus_diversity_sketch",
-    "customers_with_open_orders",
-    "customers_without_orders",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "doc_fingerprint",
-    "doc_repetition",
-    "domain_caps",
-    "embedding_cov",
-    "embedding_rp",
-    "knn_graph_descent",
-    "knn_graph_recall",
-    "lang_id",
-    "merge_upsert",
-    "minhash_signatures",
-    "multimodal_decode",
-    "near_dup_ingest",
-    "order_priority_check",
-    "segment_custkey_setops",
-    "simhash_fingerprints",
-    "train_test_split",
-    "vocab_growth",
-    # (c) r12-era greens, alphabetical up to the budget (the 26 past the
-    # cut — knn_accuracy .. wav_decode — lead the r18 rotation)
-    "ann_ivfpq_recall",
-    "ann_pq_recall",
-    "asof_click_attribution",
-    "basket_lift",
-    "centroid_eval",
-    "cohort_retention",
-    "dedup_containment",
-    "dsir_ingest",
-    "dsir_sample",
-]
+# The driver certifies the first WINDOW_SLOTS names of queries() per round.
+WINDOW_SLOTS = 50
 
-# Round-16 window (VERDICT r15 tasks 2-3+6): 50 slots = (a) the one
-# never-certified r16 query (the within-doc repeated-span trim), (b) the
-# seven rows touched by the public width-default flip — the five narrow
-# sign-bucket gates re-registered through explicitly-pinned *_gate
-# wrappers (values bit-identical, verified ALL MATCH at sf0.001 + sf0.01
-# by driver_sim before staging), plus decontam_audit (now composes
-# semantic_decontam_gate) and bitext_mining_wide (the shared
-# _bitext_mining_at gained the ADVICE r15 denominator guard — an
-# identity on this fixture, verified MATCH) — then (c) the ENTIRE
-# r10-era freshness queue (22 names, the oldest standing greens; the
-# text diamond family grouped for leaf/memo reuse), and (d) the
-# alphabetically-first 14 of the 40 r11-era greens, plus the six
-# late-r16 eval-metric queries (BLEU and chrF at pair and corpus
-# granularity, WER via the recursive-CTE Levenshtein wavefront, and
-# the ANN nDCG@3 ranking gate — never certified; ALL MATCH at
-# sf0.001 + sf0.01 by driver_sim before staging; each takes the slot
-# of an alphabetically-last r11-era name — compression_ratio,
-# contamination_check, contrastive_pairs, corpus_diversity,
-# corpus_diversity_sketch and customers_with_open_orders stay queued
-# for r17, the rotation loses nothing).  1+7+22+14+6 = exactly the
-# 50-slot budget; after r16 certifies, the oldest standing green is
-# r11-era and the 26 r11-era names past the cut lead the r17 rotation
-# (recompute eras from CORRECTNESS_r*.json, or read REGISTRY.md's
-# last-green column).
-_PRIORITY_R16 = [
-    # (a) never certified
-    "doc_repetition_strip",
-    # (a cont., late r16) BLEU and chrF beside the rouge family they
-    # extend (shared pair leafs)
-    "bleu_pairs",
-    "bleu_corpus",
-    "chrf_pairs",
-    "chrf_corpus",
-    "wer_pairs",
-    # (a cont., late r16) the ANN ranking gate beside the ANN family in
-    # (d) (shared _embeddings leaf)
-    "ann_ndcg",
-    # (b) the width-default flip closures, family-grouped (shared
-    # _embeddings leaf; the audits ride the sign-bucket candidate leafs)
-    "ann_bucketed_topk",
-    "semantic_dedup",
-    "semantic_decontam",
-    "hybrid_dedup_audit",
-    "decontam_audit",
-    "bitext_mining",
-    "bitext_mining_wide",
-    # (c) the full r10-era queue — text diamond family first (shared
-    # sentence/token leafs), then the rest alphabetical
-    "similarity_edges",
-    "term_stats",
-    "textrank_ranks",
-    "textrank_top5",
-    "top_keywords",
-    "partition_rewrite_plan",
-    "q12_late_shipments",
-    "q13_customer_distribution",
-    "q16_parts_supplier_count",
-    "q20_excess_shippers",
-    "q21_waiting_suppliers",
-    "quantile_sketch",
-    "salted_heavy_agg",
-    "salted_join",
-    "shard_shuffle",
-    "snapshot_diff",
-    "snapshot_drift",
-    "table_profile",
-    "text_normalize",
-    "timeseries_fill",
-    "typo_pairs",
-    "zorder_stats",
-    # (d) r11-era greens, alphabetical up to the 50-slot budget (the ANN
-    # family groups naturally and shares the _embeddings leaf with (b))
-    "ann_cosine_topk",
-    "ann_cosine_topk_arrow",
-    "ann_graph_search",
-    "ann_graph_search_recall",
-    "ann_graph_tuning",
-    "ann_recall_sweep",
-    "ann_sq_topk",
-    "benchmark_decontam",
-    "bigram_lm",
-    "bloom_semijoin",
-    "bm25_search",
-    "char_entropy",
-    "classifier_score",
-    "clf_ingest",
-]
 
-# Round-15 window (VERDICT r14 tasks 1-2+4-5): 50 slots — (a) the
-# never-certified r15 queries (the wide production forms of the four
-# narrow sign-bucket consumers, the wide-detector audit twins and the
-# wide image family, each verified ALL MATCH at sf0.001 + sf0.01 by
-# driver_sim before staging), (b) every closure check_recert flags as
-# changed this round (the _bucket_of(dims)/_line_occ shared-helper
-# refactors plus the ccnet NULL-lang sentinel and the band-tuning
-# nullif guard — values verified bit-exact by driver_sim at both gate
-# scales before staging), then (c) the queued r10-era greens from the
-# r10 rotation queue, oldest-first alphabetical up to the budget (the
-# remainder was drained by the r16 window above).
-_PRIORITY_R15 = [
-    # (a) never certified (8) — wide production forms beside their
-    # families: the four sign-bucket consumers' wide twins, the wide
-    # image detector pair, and the wide-detector audit twins
-    "ann_bucketed_topk_wide",
-    "semantic_dedup_wide",
-    "semantic_decontam_wide",
-    "hybrid_dedup_audit_wide",
-    "image_phash_wide",
-    "image_near_dups_wide",
-    "multimodal_dedup_audit_wide",
-    "trimodal_dedup_audit_wide",
-    # (b) changed-since-green (19, the full check_recert enumeration):
-    # the sign-bucket family over the shared _bucket_of /
-    # _bucket_cosine_pairs builders (family-grouped for leaf/memo
-    # reuse), the _banded_pairs image/audio candidate families and the
-    # audits composed over them, the _line_occ pair, then the two
-    # advice fixes
-    "ann_bucketed_topk",
-    "embedding_near_dups",
-    "embedding_near_dups_wide",
-    "embedding_ingest",
-    "semantic_dedup",
-    "semantic_decontam",
-    "hybrid_dedup_audit",
-    "decontam_audit",
-    "image_near_dups",
-    "image_dedup_clusters",
-    "audio_near_dups",
-    "audio_near_dups_wide",
-    "audio_dedup_clusters",
-    "multimodal_dedup_audit",
-    "trimodal_dedup_audit",
-    "line_dedup",
-    "boilerplate_strip",
-    "ccnet_buckets",
-    "minhash_band_tuning",
-    # (b cont., late r15) production-width lifecycle symmetry: the six
-    # wide cluster/ingest queries (never certified) ride beside their
-    # families, and the three narrow gates whose shared
-    # _ingest_gate_join closure changed re-certify with them — each
-    # verified ALL MATCH at sf0.001 + sf0.01 by driver_sim before
-    # staging; each takes the slot of an alphabetically-last r10-era
-    # name that stayed queued via the r10 rotation queue (retired; see git
-    # history — the r12-r14 late-round precedent, the rotation loses
-    # nothing)
-    "image_dedup_clusters_wide",
-    "audio_dedup_clusters_wide",
-    "video_dedup_clusters_wide",
-    "phash_ingest_wide",
-    "audio_fp_ingest_wide",
-    "video_fp_ingest_wide",
-    "phash_ingest",
-    "audio_fp_ingest",
-    "video_fp_ingest",
-    # (b cont., late r15) margin-criterion bitext mining, both widths
-    # (never certified; ALL MATCH at sf0.001 + sf0.01 before staging;
-    # same displacement rule as above)
-    "bitext_mining",
-    "bitext_mining_wide",
-    # (c) r10-era greens from the r10 rotation queue (retired; see git
-    # history), alphabetical up
-    # to the 50-slot budget (8 + 19 + 11 + 12; the tail past the cut —
-    # partition_rewrite_plan..zorder_stats and the textrank/term_stats
-    # group — stayed queued via the retired r10 rotation queue)
-    "graph_lpa",
-    "graph_lpa_capped",
-    "graph_triangles",
-    "heavy_hitters_sketch",
-    "incremental_agg",
-    "key_skew_profile",
-    "length_outliers",
-    "lsa_concepts_distributed",
-    "minhash_lsh_mllib_recall",
-    "multimodal_features",
-    "ngram_novelty",
-    "pack_sequences",
-]
+def artifact_round(path: str) -> int:
+    """CORRECTNESS_r18.json -> 18."""
+    return int(re.search(r"_r(\d+)\.json$", os.path.basename(path)).group(1))
 
-# Round-14 window (VERDICT r13 task 2): 50 slots — (a) ALL 22
-# _PRIORITY_R13_SPILL names (the whole r9-era freshness debt; the rouge
-# family stays adjacent for leaf reuse), (b) the 6 changed-since-green
-# rows (the narrow video family through the variable-length change:
-# n_frames in the band key, length-scaled threshold; the mixture pair
-# through the p_mix-from-pa_micro fold-order fix — every one re-verified
-# MATCH at sf0.01 by driver_sim before staging), (c) the 12 new r14
-# queries (the production-width media fingerprints/pairs of VERDICT r13
-# task 3, each full-SQL-gated with HUGEINT-interim oracles; the
-# rfm_segments_approx sketch-cutpoint twin of task 6; and the seven
-# late-r14 additions: minhash_band_tuning, hard_negative_mining,
-# ccnet_buckets, boilerplate_strip, embedding_ingest + its wide twin,
-# embedding_near_dups_wide), and (d) the alphabetically-first 10 of the
-# 46 r10-era greens (the leftovers stayed queued via the r10 rotation
-# queue — retired below — until the r15/r16 windows drained it).
-_PRIORITY_R14 = [
-    # (a) the full r13 spill — oldest standing greens (r9-era)
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q8_market_share",
-    "q9_product_profit",
-    "rich_customers_sql",
-    "rouge_l",
-    "rouge_n",
-    "rouge_n_relational",
-    "rouge_n_stemmed",
-    "rouge_sweep",
-    "rouge_sweep_stemmed",
-    "sales_cube",
-    "sales_grouping_sets",
-    "sales_rollup",
-    "stupid_backoff",
-    "tfidf_doc_topk",
-    "tokenizer_fertility",
-    "top_customers_per_nation",
-    "user_value_moving_avg",
-    "vocab_kl_drift",
-    "weighted_sample",
-    # (b) changed-since-green: the variable-length video family (shared
-    # fingerprint leaf), then the mixture pair (shared quota chain)
-    "video_fingerprint",
-    "video_near_dups",
-    "video_fp_ingest",
-    "video_dedup_clusters",
-    "source_mixture",
-    "mixture_sample",
-    # (c) new in r14: production-width media (fingerprint leaf shared
-    # within each modality), the sketch-cutpoint RFM twin, then the
-    # seven late-r14 additions (LSH band-layout sweep beside its
-    # signature family, embedding hard negatives, CCNet terciles riding
-    # doc_perplexity, the C4 boilerplate transform, and the
-    # embedding-ingest trio — each verified ALL MATCH at sf0.01 by
-    # driver_sim before staging;
-    # each takes the slot of an alphabetically-last r10-era name that
-    # stayed queued via the retired r10 rotation queue, the r12/r13
-    # late-round precedent)
-    "video_fingerprint_wide",
-    "video_near_dups_wide",
-    "audio_fingerprint_wide",
-    "audio_near_dups_wide",
-    "rfm_segments_approx",
-    "minhash_band_tuning",
-    "hard_negative_mining",
-    "ccnet_buckets",
-    "boilerplate_strip",
-    "embedding_ingest",
-    "embedding_ingest_wide",
-    "embedding_near_dups_wide",
-    # (d) r10-era greens, alphabetical up to the budget
-    "ann_ivf_recall",
-    "distinct_sketch",
-    "doc_chunks",
-    "doc_perplexity",
-    "dq_checks",
-    "embedding_pca",
-    "event_anomalies",
-    "event_funnel",
-    "events_typed_props",
-    "graph_khop",
-]
 
-_PRIORITY_R13 = [
-    # (a) never certified — the video family first (shared fingerprint
-    # leaf), then the acoustic gate beside its family, then the audit
-    # beside the dedup rows below.  Late-r13 family-symmetry queries
-    # (video gate + audio/video clusters, each verified ALL MATCH by
-    # driver_sim before staging) ride beside their families, each taking
-    # the slot of an alphabetically-last r9-era name that moves to the
-    # spill head — the r12 late-round precedent, the rotation loses
-    # nothing
-    "video_fingerprint",
-    "video_near_dups",
-    "video_fp_ingest",  # late r13
-    "video_dedup_clusters",  # late r13
-    "audio_fp_ingest",
-    "audio_dedup_clusters",  # late r13
-    "multimodal_dedup_audit",
-    "trimodal_dedup_audit",  # late r13: the full agreement matrix
-    "semantic_decontam",  # late r13: embedding-side benchmark decontam
-    "decontam_audit",  # late r13: lexical vs semantic decontam agreement
-    # (b) changed-since-green, family-grouped: image hash family (shared
-    # phash leaf), audio family, the frame walker's keyframe pass
-    "image_phash",
-    "image_near_dups",
-    "phash_ingest",
-    "image_dedup_clusters",
-    "audio_fingerprint",
-    "audio_near_dups",
-    "frame_sample",
-    # (b cont.) dedup-cluster family over the shared LSH pair leaf
-    "dedup_clusters",
-    "dedup_keep_best",
-    "curation_pipeline",
-    # (b cont.) the mixture quartet (scalar totals now 1-row agg
-    # broadcasts over a leafed per-source frame) + the hardened index
-    "source_mixture",
-    "mixture_sample",
-    "token_budget_mixture",
-    "token_budget_mixture_salted",
-    "ann_graph_search_indexed",
-    # (c) the 12 r8-era spill greens — the oldest standing rows
-    "q7_volume_shipping",
-    "rfm_segments",
-    "sentences",
-    "substring_dedup",
-    "tar_shards_roundtrip",
-    "tf_map",
-    "tfidf_topk_mllib",
-    "tokens_lsa",
-    "tokens_textrank",
-    "tokens_wordnet",
-    "vocabulary",
-    "wav_files_decode",
-    # (d) r9-era greens, alphabetical up to the budget
-    "audio_resample",
-    "bpe_encode",
-    "bpe_roundtrip",
-    "bpe_vocab",
-    "dedup_ngram_jaccard",
-    "embedding_cov_gram_check",
-    "events_hourly",
-    "events_json_stats",
-    "image_resize",
-    "jsonl_roundtrip",
-    "lsa_concepts",
-    "lsa_summary",
-    "orc_roundtrip",
-]
+def last_green_rounds(paths: Iterable[str] | None = None) -> dict[str, int]:
+    """query -> newest round whose ``CORRECTNESS_rN.json`` row is green: no
+    ``err`` and every non-null match flag true.  ``paths`` defaults to
+    every round artifact next to this module."""
+    if paths is None:
+        paths = glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))
+    out: dict[str, int] = {}
+    for path in sorted(paths, key=artifact_round):
+        with open(path) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            flags = [
+                row.get(k)
+                for k in ("rows_match", "schema_match", "hash_match")
+                if row.get(k) is not None
+            ]
+            if not row.get("err") and flags and all(flags):
+                out[name] = artifact_round(path)
+    return out
 
-_PRIORITY_R13_SPILL = [
-    # displaced by the late-r13 additions (see _PRIORITY_R13)
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q8_market_share",
-    "q9_product_profit",
-    "rich_customers_sql",
-    "rouge_l",
-    "rouge_n",
-    "rouge_n_relational",
-    "rouge_n_stemmed",
-    "rouge_sweep",
-    "rouge_sweep_stemmed",
-    "sales_cube",
-    "sales_grouping_sets",
-    "sales_rollup",
-    "stupid_backoff",
-    "tfidf_doc_topk",
-    "tokenizer_fertility",
-    "top_customers_per_nation",
-    "user_value_moving_avg",
-    "vocab_kl_drift",
-    "weighted_sample",
-]
 
-_PRIORITY_R12 = [
-    # (a) never certified
-    "dsir_weights",
-    "dsir_sample",
-    "dsir_ingest",
-    "ann_graph_search_indexed",
-    "image_phash",
-    "image_near_dups",
-    "phash_ingest",  # late-r12: the streaming image-ingest gate's batch
-    # twin (stream==batch proof in tests/test_streaming.py)
-    "image_dedup_clusters",  # late-r12: components over the phash pairs
-    "audio_fingerprint",  # late-r12: the acoustic dedup twin (sign-of-
-    "audio_near_dups",    # derivative fp over real wave-parsed PCM)
-    # (each late-r12 query takes the slot of an alphabetically-last
-    # r8-era name, which moves to the spill so the rotation loses
-    # nothing)
-    # (b) r7-era greens — the oldest standing rows in the registry
-    "pii_scrub",
-    "quality_score",
-    "sales_pivot",
-    "cohort_retention",
-    "events_by_segment",
-    "events_dedup",
-    "events_sliding",
-    "simhash_near_pairs",
-    "stratified_sample",
-    "token_count",
-    "topk_ngrams",
-    "user_sessions",
-    "view_click_pairs",
-    "wav_decode",
-    # (c) r8-era greens, alphabetical up to the budget
-    "ann_ivfpq_recall",
-    "ann_pq_recall",
-    "asof_click_attribution",
-    "basket_lift",
-    "centroid_eval",
-    "dedup_containment",
-    "embedding_quantize",
-    "event_transitions",
-    "events_in_sessions",
-    "gopher_rules",
-    "knn_accuracy",
-    "lineitem_stats",
-    "pmi_edges",
-    "ppl_ingest",
-    "ppm_files_decode",
-    "price_percentiles",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q19_discounted_revenue",
-    "q22_global_sales_opportunity",
-    "q2_min_cost_supplier",
-    "q6_forecast_revenue",
-]
+def window_order(names: Iterable[str], greens: dict[str, int]) -> list[str]:
+    """Oldest certification first: key (last green round, 0 if never
+    green; name)."""
+    return sorted(names, key=lambda n: (greens.get(n, 0), n))
 
-_PRIORITY_R12_SPILL = [
-    "q7_volume_shipping",
-    "rfm_segments",
-    "sentences",
-    "substring_dedup",
-    "tar_shards_roundtrip",
-    "tf_map",
-    "tfidf_topk_mllib",
-    "tokens_lsa",
-    "tokens_textrank",
-    "tokens_wordnet",
-    "vocabulary",
-    "wav_files_decode",
-]
 
-# Retired rotation history (r6-r11 windows, the r7 overflow, the
-# r8-r11 staging/spill queues, and the r10-era rotation queue): every
-# name those ~600 lines staged has been re-certified in a later round's
-# window — the r16 window drains the last of the r10-era queue — and the
-# dict-dedupe in queries() made the lists inert long before that.  The
-# full per-round composition arithmetic lives in git history (any tree
-# at or before the r15 artifact commit) and in PLANS.md's round notes;
-# per-query last-green rounds are generated into REGISTRY.md.
-
-# r16 window first (the driver's 50-slot budget reads front-to-back, dict
-# insertion dedupes repeats), then the recent windows so every
-# still-staged name stays queued for check_recert.
-_PRIORITY = (
-    _PRIORITY_R17
-    + _PRIORITY_R16
-    + _PRIORITY_R15
-    + _PRIORITY_R14
-    + _PRIORITY_R13
-    + _PRIORITY_R13_SPILL
-    + _PRIORITY_R12
-    + _PRIORITY_R12_SPILL
-)
+# Read once at import: queries() runs inside timed passes.
+_GREENS = last_green_rounds()
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -636,9 +121,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _MODULES:
         merged.update(mod.QUERIES)
-    out = {name: merged[name] for name in _PRIORITY if name in merged}
-    out.update(merged)
-    return out
+    return {name: merged[name] for name in window_order(merged, _GREENS)}
 
 
 def oracle_sql() -> dict[str, str]:

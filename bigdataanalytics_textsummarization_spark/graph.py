@@ -20,11 +20,11 @@ where len() counts the full token list including duplicates, and
 zero-weight / self pairs are dropped (P9).
 
 Who builds edges here: the ``similarity_edges`` and ``graph_*`` queries,
-``pagerank.ranks_from``'s callers (the ``tol`` early-stop path and any
-caller with its own edge table) and the TextRank products too large for
-the per-product kernel (``pagerank.textrank_ranks_auto_from`` routes
-them here through the size gate).  ``textrank_ranks``, ``textrank_top5``
-and ``reviews.textrank_review_summary`` otherwise rank through
+``pagerank.ranks_from``'s callers with their own edge table and the
+TextRank products too large for the per-product kernel
+(``pagerank.textrank_ranks_auto_from`` routes them here through the size
+gate).  ``textrank_ranks``, ``textrank_top5`` and
+``reviews.textrank_review_summary`` otherwise rank through
 ``pagerank.textrank_ranks_from``, which computes the same weights inside
 one numpy batch per product and never materializes this table.
 """

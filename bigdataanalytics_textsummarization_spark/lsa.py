@@ -63,7 +63,9 @@ def tfidf_long_from(toks: DataFrame, lsa_sent: DataFrame) -> DataFrame:
         # corpus size is a plain count — no Expand/distinct aggregation
         F.count("*").cast("double").alias("n_sentences")
     )
-    # one tokenization pass: df re-aggregates tf (exchange reuse)
+    # df re-aggregates tf, but the optimizer prunes tf's count from the
+    # df branch, so its exchange differs from tf's and is not reused: the
+    # executed plan runs two scan + tokenize pipelines, one per branch
     tf = toks.groupBy("source", "sentence_id", "word").agg(
         F.count("*").alias("tf")
     )

@@ -22,12 +22,12 @@ whose matrices exceed the shared size gate (``sizegate.py``, n² + n·V
 cells) to the join path instead.
 
 The join path (:func:`ranks_from` over ``graph.edges_from``) serves those
-oversized products, the ``tol`` early-stop variant and any caller with its
-own edge table: the contribution scatter is a shuffle join keyed on
-(source, src), and the static contribution weights (w/Σw) are computed
-once into a ``leaf()`` that every iteration reuses.  On a cluster the rank
-table is tiny relative to edges, so AQE turns the per-iteration join into
-a broadcast automatically.
+oversized products and any caller with its own edge table: the
+contribution scatter is a shuffle join keyed on (source, src), and the
+static contribution weights (w/Σw) are computed once into a ``leaf()``
+that every iteration reuses.  On a cluster the rank table is tiny
+relative to edges, so AQE turns the per-iteration join into a broadcast
+automatically.
 """
 
 from __future__ import annotations
@@ -40,7 +40,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from . import sizegate
-from .functions import _retire_ckpt, leaf, pin_checkpoint, r6, session_memo
+from .functions import leaf, pin_checkpoint, r6, session_memo
 from .graph import EDGES_PREAMBLE, edges_from
 from .sizegate import MAX_LOCAL_CELLS
 from .text import sentences, tokens_textrank
@@ -50,18 +50,10 @@ DAMPING = 0.85
 INIT_RANK = 0.15
 
 
-def ranks_from(
-    edges: DataFrame,
-    iterations: int = N_ITERATIONS,
-    tol: float | None = None,
-) -> DataFrame:
-    """Weighted PageRank over any (source, src, dst, weight) edge table.
-
-    ``tol``: optional convergence-based early stop (SURVEY §4.1 extension —
-    the reference always runs exactly 5 iterations with no test, which the
-    default preserves).  When set, iteration stops once the max absolute
-    rank delta falls below ``tol``; the delta check is one tiny agg per
-    iteration over the rank table (cheap relative to the join)."""
+def ranks_from(edges: DataFrame, iterations: int = N_ITERATIONS) -> DataFrame:
+    """Weighted PageRank over any (source, src, dst, weight) edge table:
+    exactly ``iterations`` steps, no convergence test (the reference's
+    semantics)."""
     edges = edges.select("source", "src", "dst", "weight")
     out_w = edges.groupBy("source", "src").agg(F.sum("weight").alias("out_w"))
     # Static normalized contribution weights, reused every iteration.
@@ -131,40 +123,10 @@ def ranks_from(
         # identical results).  With ew a LogicalRDD leaf (above), each
         # iteration's analysis is shallow; a periodic LAZY checkpoint of
         # the rank state still bounds analyzer depth on LONG runs (never
-        # fires at the reference's 5 iterations).  The tol path keeps an
-        # eager checkpoint because its per-iteration delta collect is a
-        # second action over new_ranks.
-        if tol is None and (i + 1) % 10 == 0 and i + 1 < iterations:
+        # fires at the reference's 5 iterations).
+        if (i + 1) % 10 == 0 and i + 1 < iterations:
             new_ranks = pin_checkpoint(new_ranks)
-        if tol is not None:
-            new_ranks = pin_checkpoint(new_ranks, eager=True)
-            delta = (
-                new_ranks.join(
-                    ranks.select(
-                        "r_source", "r_id", F.col("rank").alias("prev")
-                    ),
-                    ["r_source", "r_id"],
-                )
-                .agg(F.max(F.abs(F.col("rank") - F.col("prev"))).alias("d"))
-                .collect()[0]["d"]
-            )
-            # iteration i-1's eager checkpoint is dead once the delta
-            # collect above has read it (new_ranks is materialized and
-            # nothing downstream references prev) — retire it mid-loop
-            # like the k-hop/LPA/descent loops, keeping the tol path's
-            # block-manager footprint O(1) in iteration count (VERDICT
-            # r9 task 7).  Safe no-op on iteration 0, where ranks is the
-            # leaf-derived init, not a registered checkpoint.
-            prev = ranks
-            ranks = new_ranks
-            _retire_ckpt(prev)
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = new_ranks
-    # fixed-iteration path: change the loop above to checkpoint every ~10
-    # rounds (lazy) before raising N_ITERATIONS past the analyzer's
-    # comfort; at the reference's 5 the un-cut linear plan is the win
+        ranks = new_ranks
     return ranks.select(
         F.col("r_source").alias("source"),
         F.col("r_id").alias("sentence_id"),

@@ -1,30 +1,30 @@
 """Mechanized re-certification check (round-4 VERDICT task #4).
 
 The driver's green rows stand across rounds, so a query whose
-implementation changed AFTER its last all-true row is silently running on
-stale certification unless it is re-staged in ``_PRIORITY``.  That rule
-used to live only in the builder's head; this script makes drift a CI
-failure.
+implementation changed AFTER its last all-true row is running on stale
+certification until the driver's 50-slot window reaches it again.  This
+script makes a window that skips stale queries a CI failure.
 
 For every registered query:
 
-1. Find its last green round (parse ``CORRECTNESS_r*.json``; green = no
-   error and every non-null match flag true) and the commit that recorded
-   that artifact (the driver certifies the round's final tree, then the
-   artifact is committed on top of it — so that commit's tree IS the
-   certified code).
+1. Find its last green round (``__spark_entry__.last_green_rounds``) and
+   the commit that added that round's artifact (the driver certifies the
+   round's final tree, then the artifact is committed on top of it — so
+   that commit's tree IS the certified code).
 2. Fingerprint the query's implementation NOW and AT that commit: the
    docstring-stripped AST of the defining function plus everything it
    transitively references — same-module top-level defs/constants AND,
    through ``from .x import y`` header imports, the referenced
    definitions in other package modules (recursively).  Docstring and
    comment edits never flag; any reachable code change does.
-3. If the fingerprints differ (or the query has never been green) the
-   query MUST appear in ``_PRIORITY`` — else exit non-zero.
+3. A query is stale if the fingerprints differ or it has never been
+   green.  Exit non-zero when a query that is not stale holds one of the
+   first ``WINDOW_SLOTS`` names of ``queries()`` while a stale query sits
+   behind them.
 
-Definition-level (not file-level) granularity is what keeps this
-compatible with the driver's ~50-query budget: one fix inside a
-40-query module stages the queries that actually reach it, not forty.
+Definition-level (not file-level) granularity keeps the stale set to the
+queries that actually reach a change: one fix inside a 40-query module
+stales the queries that call it, not forty.
 
 Usage: python scripts/check_recert.py   (also run by tests/test_recert.py)
 """
@@ -34,14 +34,15 @@ from __future__ import annotations
 import ast
 import glob
 import hashlib
-import json
 import os
-import re
 import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "bigdataanalytics_textsummarization_spark"
+sys.path.insert(0, REPO)
+
+import __spark_entry__ as e  # noqa: E402
 
 
 def _git(*args: str) -> str:
@@ -212,76 +213,79 @@ def closure_like_probe(src: str, name: str) -> str | None:
     )
 
 
-def _is_green(row: dict) -> bool:
-    if row.get("err"):
-        return False
-    flags = [
-        row.get(k)
-        for k in ("rows_match", "schema_match", "hash_match")
-        if row.get(k) is not None
-    ]
-    return bool(flags) and all(flags)
-
-
 def last_green_commits() -> dict[str, str]:
-    """query -> commit hash of the newest round artifact with a green row."""
-    out: dict[str, str] = {}
-    arts = sorted(
-        glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-    for path in arts:
+    """query -> commit that added its newest green round artifact."""
+    # Baseline against the commit that INTRODUCED the round artifact
+    # (oldest --diff-filter=A hit), not the newest commit touching it: a
+    # post-hoc refresh of an artifact file must not silently re-baseline
+    # its queries to a tree they were never re-run on (ADVICE r6 — commit
+    # 955acfd did exactly that).  Uncommitted artifacts certify nothing.
+    added: dict[str, str] = {}  # artifact path -> commit that added it
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
         rel = os.path.basename(path)
-        # Baseline against the commit that INTRODUCED the round artifact
-        # (oldest --diff-filter=A hit), not the newest commit touching it:
-        # a post-hoc refresh of an artifact file must not silently
-        # re-baseline its queries to a tree they were never re-run on
-        # (ADVICE r6 — commit 955acfd did exactly that).
         adds = _git("log", "--diff-filter=A", "--format=%H", "--", rel).split()
-        commit = adds[-1] if adds else ""
-        if not commit:
-            continue  # uncommitted artifact
-        with open(path) as f:
-            rows = json.load(f)
-        for name, row in rows.items():
-            if _is_green(row):
-                out[name] = commit  # later rounds overwrite: newest green
-    return out
+        if adds:
+            added[path] = adds[-1]
+    by_round = {e.artifact_round(p): commit for p, commit in added.items()}
+    return {
+        name: by_round[rnd] for name, rnd in e.last_green_rounds(added).items()
+    }
 
 
-def main() -> int:
-    sys.path.insert(0, REPO)
-    import __spark_entry__ as e
-
-    queries = e.queries()
-    priority = set(e._PRIORITY)
-    greens = last_green_commits()
-    now_fp = _Fingerprinter(None)
-    then_fps: dict[str | None, _Fingerprinter] = {}
-    stale: list[tuple[str, str]] = []
-    for name, fn in sorted(queries.items()):
-        if name in priority:
-            continue  # already staged for a fresh row
+def stale_queries(
+    queries: dict, greens: dict[str, str], now_fp: _Fingerprinter | None = None
+) -> dict[str, str]:
+    """name -> reason, for each query never certified green or whose
+    closure fingerprint (``now_fp``, default the working tree) differs
+    from the one at its green commit."""
+    now_fp = now_fp or _Fingerprinter(None)
+    then_fps: dict[str, _Fingerprinter] = {}
+    stale: dict[str, str] = {}
+    for name, fn in queries.items():
         commit = greens.get(name)
         if commit is None:
-            stale.append((name, "never certified green"))
+            stale[name] = "never certified green"
             continue
         if commit not in then_fps:
             then_fps[commit] = _Fingerprinter(commit)
         now = now_fp.fingerprint(fn.__module__, fn.__name__)
         then = then_fps[commit].fingerprint(fn.__module__, fn.__name__)
         if then is None or now is None:
-            stale.append((name, f"unresolvable at green commit {commit[:8]}"))
+            stale[name] = f"unresolvable at green commit {commit[:8]}"
         elif now != then:
-            stale.append((name, f"closure changed since green {commit[:8]}"))
-    if stale:
-        print("RECERT FAIL: changed-since-green queries not in _PRIORITY:")
-        for name, why in stale:
-            print(f"  {name}: {why}")
+            stale[name] = f"closure changed since green {commit[:8]}"
+    return stale
+
+
+def window_violations(
+    order: list[str], stale: dict[str, str]
+) -> tuple[list[str], list[str]]:
+    """(names in the driver window that are not stale, stale names after
+    it); the order is wrong when both are non-empty."""
+    window = order[: e.WINDOW_SLOTS]
+    return (
+        [n for n in window if n not in stale],
+        [n for n in order[e.WINDOW_SLOTS :] if n in stale],
+    )
+
+
+def main() -> int:
+    queries = e.queries()
+    order = list(queries)
+    stale = stale_queries(queries, last_green_commits())
+    fresh_in, stale_out = window_violations(order, stale)
+    if fresh_in and stale_out:
+        print(
+            f"RECERT FAIL: the first {e.WINDOW_SLOTS} of queries() hold "
+            "queries that are not stale while stale ones wait behind them"
+        )
+        print(f"  not stale, in the window ({len(fresh_in)}):", *fresh_in)
+        print(f"  stale, outside it ({len(stale_out)}):", *stale_out)
         return 1
+    slots = min(e.WINDOW_SLOTS, len(order))
     print(
-        f"recert OK: {len(queries)} queries, {len(priority)} staged, "
-        "no uncertified drift"
+        f"recert OK: {len(queries)} queries, {len(stale)} stale, "
+        f"{slots - len(fresh_in)}/{slots} of the window stale"
     )
     return 0
 

