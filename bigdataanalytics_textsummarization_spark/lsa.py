@@ -9,8 +9,12 @@ since U of M gives exactly V of M^T; we factor once).
 Scale architecture: the reference materializes the dense matrix on the
 driver (code:130-137) — its scalability cliff.  Here each *corpus*
 (source) is an independent small problem, so the engine distributes across
-corpora with ``applyInPandas``: one Arrow batch per source, numpy SVD
-inside the worker, relational rows out.  A source whose (vocab x
+corpora with ``applyInPandas``: one Arrow batch of LSA tokens per source,
+numpy TF-IDF and SVD inside the worker, relational rows out
+(:func:`lsa_concepts_from_tokens`), so the tokens are read once and
+nothing is cached.  The kernel's log10 is Java's ``StrictMath.log10``
+(``strictmath.py``), so its TF-IDF equals the Spark-built one
+(:func:`tfidf_long_from`) bit for bit.  A source whose (vocab x
 sentences) matrix would not fit one worker is SIZE-DISPATCHED
 (``lsa_concepts_auto_from``, through the gate in ``sizegate.py`` that
 TextRank shares) to MLlib's distributed ``computeSVD`` instead, so
@@ -36,7 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import sizegate
+from . import sizegate, strictmath
 from .functions import pin, r6
 from .sizegate import MAX_LOCAL_CELLS
 from .text import lsa_sentences, sentences, tokens_lsa
@@ -57,7 +61,12 @@ _LSA_SCHEMA = T.StructType(
 
 
 def tfidf_long_from(toks: DataFrame, lsa_sent: DataFrame) -> DataFrame:
-    """Unrounded TF-IDF in long form from any token/sentence frames."""
+    """Unrounded TF-IDF in long form from any token/sentence frames.
+
+    The Spark twin of the kernel's TF-IDF (:func:`_tfidf_matrix`).  In
+    the engine only the oversized-source fallback of
+    :func:`lsa_concepts_auto_from` builds it; the tests and perfbench's
+    layer trace call it to check and time the kernel against it."""
     n_per_source = lsa_sent.groupBy("source").agg(
         # sentence_id is unique by construction (doc_id x pos), so the
         # corpus size is a plain count — no Expand/distinct aggregation
@@ -84,19 +93,11 @@ def tfidf_long_from(toks: DataFrame, lsa_sent: DataFrame) -> DataFrame:
     )
 
 
-def _extract_concepts(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One corpus -> (concept, kind, rk, item, weight) rows via one SVD."""
-    source = pdf["source"].iloc[0]
-    sent_ids = sorted(pdf["sentence_id"].unique())
-    words = sorted(pdf["word"].unique())
-    sid_ix = {s: i for i, s in enumerate(sent_ids)}
-    w_ix = {w: i for i, w in enumerate(words)}
-    # rows = words, cols = sentences (reference layout, code:134-137)
-    m = np.zeros((len(words), len(sent_ids)))
-    m[
-        pdf["word"].map(w_ix).to_numpy(),
-        pdf["sentence_id"].map(sid_ix).to_numpy(),
-    ] = pdf["tfidf"].to_numpy()
+def _concepts(
+    source: str, sent_ids: np.ndarray, words: np.ndarray, m: np.ndarray
+) -> pd.DataFrame:
+    """One corpus's (words x sentences) TF-IDF matrix, ids sorted on both
+    axes -> (concept, kind, rk, item, weight) rows via one SVD."""
     u, s, vt = np.linalg.svd(m, full_matrices=False)
     k = min(K_CONCEPTS, len(s))
     rows: list[tuple] = []
@@ -125,16 +126,76 @@ def _extract_concepts(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _tfidf_long(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tfidf_long_from(
-        tokens_lsa(spark, sf_dir), lsa_sentences(spark, sf_dir)
-    )
+def _ids(pdf: pd.DataFrame) -> tuple:
+    """Sorted sentence ids and words of one corpus's rows, and each row's
+    (word, sentence) cell of the matrix."""
+    sent_ids, s_ix = np.unique(pdf["sentence_id"].to_numpy(), return_inverse=True)
+    words, w_ix = np.unique(pdf["word"].to_numpy(), return_inverse=True)
+    return sent_ids, words, (w_ix, s_ix)
+
+
+def _extract_concepts(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One corpus's long-form TF-IDF rows -> concepts."""
+    sent_ids, words, cells = _ids(pdf)
+    # rows = words, cols = sentences (reference layout, code:134-137)
+    m = np.zeros((len(words), len(sent_ids)))
+    m[cells] = pdf["tfidf"].to_numpy()
+    return _concepts(pdf["source"].iloc[0], sent_ids, words, m)
+
+
+def _tfidf_matrix(pdf: pd.DataFrame) -> tuple:
+    """One corpus's :func:`_kernel_rows` -> (sentence ids, words, words x
+    sentences TF-IDF): :func:`tfidf_long_from` in numpy.  The matrix is
+    the cells the size gate budgets."""
+    marks = pdf["word"].isna()
+    n_sentences = float(marks.sum())
+    sent_ids, words, cells = _ids(pdf[~marks])
+    m = np.zeros((len(words), len(sent_ids)))
+    np.add.at(m, cells, 1.0)  # tf, counting duplicate tokens
+    df = np.count_nonzero(m, axis=1)  # sentences holding each word
+    # tf * log10(N / df) bit for bit as Spark evaluates it, so the SVD
+    # gets the TF-IDF path's input and orders near-tied sentences as it
+    # does; the log is StrictMath's, taken once per distinct ratio
+    ratios, r_ix = np.unique(n_sentences / df, return_inverse=True)
+    m *= np.array([strictmath.log10(r) for r in ratios])[r_ix, None]
+    return sent_ids, words, m
+
+
+def _token_concepts(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One corpus's :func:`_kernel_rows` -> concepts."""
+    sent_ids, words, m = _tfidf_matrix(pdf)
+    if not m.size:  # LSA sentences that all lost every word
+        return pd.DataFrame(columns=_LSA_SCHEMA.fieldNames())
+    return _concepts(pdf["source"].iloc[0], sent_ids, words, m)
 
 
 def lsa_concepts_from(tfidf: DataFrame) -> DataFrame:
     """Per-source LSA concept extraction from any long-form TF-IDF frame."""
     return tfidf.groupBy("source").applyInPandas(
         _extract_concepts, schema=_LSA_SCHEMA
+    )
+
+
+def _kernel_rows(toks: DataFrame, lsa_sent: DataFrame) -> DataFrame:
+    """The kernel's input: the (source, sentence_id, word) tokens plus one
+    null-word row per LSA sentence, from which the kernel counts N.  A
+    union, not a join with per-source counts, so the count is no stage
+    the tokenization has to wait for."""
+    return toks.select("source", "sentence_id", "word").unionByName(
+        lsa_sent.select(
+            "source", "sentence_id", F.lit(None).cast("string").alias("word")
+        )
+    )
+
+
+def lsa_concepts_from_tokens(toks: DataFrame, lsa_sent: DataFrame) -> DataFrame:
+    """Per-source LSA concept extraction from any (source, sentence_id,
+    word) LSA token stream and its LSA sentences: one numpy kernel per
+    source computes the TF-IDF and the SVD, so the tokens are read once."""
+    return (
+        _kernel_rows(toks, lsa_sent)
+        .groupBy("source")
+        .applyInPandas(_token_concepts, schema=_LSA_SCHEMA)
     )
 
 
@@ -156,26 +217,32 @@ def _lsa_cells(n_sent: Column, n_words: Column) -> Column:
 
 def lsa_concepts_auto_from(
     spark: SparkSession,
-    tfidf: DataFrame,
+    toks: DataFrame,
+    lsa_sent: DataFrame,
     max_cells: int = MAX_LOCAL_CELLS,
     path: str | None = None,
 ) -> DataFrame:
-    """Size-dispatched LSA over any long-form TF-IDF frame: applyInPandas
-    for sources whose (vocab x sentences) matrix fits a worker, the
-    distributed MLlib SVD for any source above ``max_cells``
-    (:mod:`.sizegate`).  ``path`` names the input the frame was read from,
-    so the routing is memoized per dataset; without it every call probes
-    (test seam: a filtered frame + tiny ``max_cells`` forces the
-    distributed route without 20 full SVDs).  The TF-IDF persist is
-    pin()-owned (release_pins()): the probe and both paths read it."""
+    """Size-dispatched LSA over any LSA token stream and its LSA
+    sentences: the token kernel (:func:`lsa_concepts_from_tokens`) for
+    sources whose (vocab x sentences) matrix fits a worker, the distributed
+    MLlib SVD over :func:`tfidf_long_from` for any source above
+    ``max_cells`` (:mod:`.sizegate`).  The probe counts the tokens'
+    distinct (sentence, word) cells, the TF-IDF matrix's.  ``path`` names
+    the input the stream was read from, so the routing is memoized per
+    dataset; without it every call probes (test seam: a filtered stream +
+    tiny ``max_cells`` forces the distributed route without 20 full
+    SVDs).  Nothing is pinned: the kernel reads the tokens once, and on a
+    dataset's first call the probe tokenizes once more, as TextRank's
+    does."""
 
     def distributed(part: DataFrame, big: list[str]) -> DataFrame:
+        tfidf = tfidf_long_from(part, lsa_sent)
         return functools.reduce(
             DataFrame.unionByName,
             [
                 _distributed_concepts(
                     spark,
-                    part.filter(F.col("source") == src),
+                    tfidf.filter(F.col("source") == src),
                     k=K_CONCEPTS,
                     source=src,
                     kinds=("sentence", "keyword"),
@@ -184,15 +251,14 @@ def lsa_concepts_auto_from(
             ],
         )
 
-    return sizegate.dispatch(
-        pin(tfidf),
-        "lsa",
-        _lsa_cells,
-        lsa_concepts_from,
-        distributed,
-        max_cells,
-        path=path,
-    )
+    def local(part: DataFrame) -> DataFrame:
+        # no oversized source's sentence rows: they would all land in one
+        # kernel group, on one worker
+        in_big = F.col("source").isin(routing[0])
+        return lsa_concepts_from_tokens(part, lsa_sent.filter(~in_big))
+
+    routing = sizegate.route(toks, "lsa", _lsa_cells, max_cells, path)
+    return sizegate.split(toks, routing, local, distributed)
 
 
 def _distributed_concepts(
@@ -397,13 +463,14 @@ def lsa_concepts_auto(
 ) -> DataFrame:
     """Size-dispatched per-source LSA over the documents table
     (:func:`lsa_concepts_auto_from`).  The size probe is one aggregate
-    over the tfidf frame (one row per source — bounded driver
+    over the token stream (one row per source — bounded driver
     materialization, like the corpus counts the reference's loop takes
     per product), run once per dataset: repeated calls skip it (~1 s per
     call at sf0.1) while a rewritten documents table re-probes."""
     return lsa_concepts_auto_from(
         spark,
-        _tfidf_long(spark, sf_dir),
+        tokens_lsa(spark, sf_dir),
+        lsa_sentences(spark, sf_dir),
         max_cells,
         path=f"{sf_dir}/documents.parquet",
     )

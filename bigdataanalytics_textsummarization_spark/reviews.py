@@ -14,17 +14,20 @@ reviews, or any (id, source, text) dataset.  One multi-file scan replaces
 the reference's per-file driver loop (code:261-263/417-419); everything
 downstream is a single distributed plan per pipeline — no per-sentence
 lookup() jobs, and the only collect is the size gate's one-row-per-product
-probe (``sizegate.py``), run once per review directory.
+probe (``sizegate.py``), run once per review directory.  Each pipeline
+tokenizes the reviews once and hands every product's tokens to one numpy
+kernel (LSA: TF-IDF + SVD; TextRank: similarity + PageRank); nothing is
+cached between them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import lemma_light, lemma_wordnet
 from .io import read_reviews_tsv
-from .lsa import lsa_concepts_auto_from, tfidf_long_from
+from .lsa import lsa_concepts_auto_from
 from .pagerank import textrank_ranks_auto_from, top_sentences_from
 from .text import (
     lsa_sentences_from,
@@ -60,9 +63,12 @@ def lsa_review_summary(spark: SparkSession, path: str) -> DataFrame:
     """Reference entry point 1: per-product LSA concepts (5 concepts x
     3 sentences + 3 keywords), one distributed plan."""
     sent = review_sentences(read_reviews_tsv(spark, path))
-    toks = tokens_lsa_from(sent, lemma=_lemma())
-    tfidf = tfidf_long_from(toks, lsa_sentences_from(sent))
-    concepts = lsa_concepts_auto_from(spark, tfidf, path=path)
+    concepts = lsa_concepts_auto_from(
+        spark,
+        tokens_lsa_from(sent, lemma=_lemma()),
+        lsa_sentences_from(sent),
+        path=path,
+    )
     text = sent.select(F.col("sentence_id").alias("item"), "sentence")
     return (
         concepts.join(text, "item", "left")

@@ -1,5 +1,5 @@
-"""One size gate for the per-corpus numpy kernels (LSA's SVD, TextRank's
-similarity + PageRank).
+"""One size gate for the per-corpus numpy kernels (LSA's TF-IDF + SVD,
+TextRank's similarity + PageRank).
 
 Both kernels run one ``groupBy("source").applyInPandas`` batch per corpus
 and hold that corpus's dense matrices inside one Python worker.  That is

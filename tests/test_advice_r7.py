@@ -6,8 +6,8 @@
 2. the LSA dispatch memo is NOT populated when the dataset signature walk
    cannot enumerate files (remote FS) — probe every call instead of risking
    the stale-routing OOM cliff;
-3. pin() is idempotent — the LSA probe + lsa_concepts_auto_from double-pin
-   produces one registry entry and one unpersist;
+3. pin() is idempotent — a frame pinned by a caller and again by its
+   callee produces one registry entry and one unpersist;
 4. rfm_segments' monetary goes through r2() — enforced by a static lint:
    no bare decimal-digit F.round anywhere in the package outside the r2/r6
    definitions (integer-cast rounds like round(x*100).cast('long') are fine,
@@ -45,7 +45,7 @@ def test_pin_is_idempotent(spark):
     release_pins()
     df = spark.range(100).select((F.col("id") % 3).alias("k"))
     a = pin(df)
-    b = pin(a)  # the lsa_concepts_auto -> lsa_concepts_auto_from path
+    b = pin(a)  # a callee pinning its caller's pinned frame
     assert a is b
     assert len(_PINS) == 1
     assert release_pins() == 1
@@ -90,7 +90,10 @@ def test_lsa_memo_not_polluted_when_signature_unenumerable(spark, monkeypatch):
     sentinel = ([], 3)
 
     monkeypatch.setattr(sizegate, "_dataset_signature", lambda path: ())
-    monkeypatch.setattr(lsa, "_tfidf_long", lambda s, d: spark.range(1))
+    # the token stream and LSA sentences the gate reads, as stand-ins: an
+    # unpatched build would scan the missing path
+    monkeypatch.setattr(lsa, "tokens_lsa", lambda s, d: spark.range(1))
+    monkeypatch.setattr(lsa, "lsa_sentences", lambda s, d: spark.range(1))
     monkeypatch.setattr(
         sizegate, "_oversized_sources",
         lambda frame, mc, cells: (probes.append(1), sentinel)[1],

@@ -121,21 +121,26 @@ def test_size_dispatch_routes_big_sources_distributed(spark):
     from pyspark.sql import functions as F
 
     from bigdataanalytics_textsummarization_spark.lsa import (
-        _tfidf_long,
         lsa_concepts_auto_from,
-        lsa_concepts_from,
+        lsa_concepts_from_tokens,
+    )
+    from bigdataanalytics_textsummarization_spark.text import (
+        lsa_sentences,
+        tokens_lsa,
     )
 
-    tfidf = _tfidf_long(spark, SF_DIR)
+    toks, lsa_sent = tokens_lsa(spark, SF_DIR), lsa_sentences(spark, SF_DIR)
     srcs = sorted(
         r["source"]
-        for r in tfidf.select("source").distinct().limit(2).collect()
+        for r in toks.select("source").distinct().limit(2).collect()
     )
-    sub = tfidf.filter(F.col("source").isin(srcs)).persist()
+    sub = toks.filter(F.col("source").isin(srcs)).persist()
 
-    local = lsa_concepts_from(sub).toPandas()
+    local = lsa_concepts_from_tokens(sub, lsa_sent).toPandas()
     # max_cells=1: every source is "too big" -> all-distributed route
-    dispatched = lsa_concepts_auto_from(spark, sub, max_cells=1).toPandas()
+    dispatched = lsa_concepts_auto_from(
+        spark, sub, lsa_sent, max_cells=1
+    ).toPandas()
 
     assert set(dispatched["source"]) == set(srcs)
     assert set(dispatched["kind"]) == {"sentence", "keyword"}
@@ -155,14 +160,17 @@ def test_size_dispatch_mixed_split(spark):
     from pyspark.sql import functions as F
 
     from bigdataanalytics_textsummarization_spark.lsa import (
-        _tfidf_long,
         lsa_concepts_auto_from,
-        lsa_concepts_from,
+        lsa_concepts_from_tokens,
+    )
+    from bigdataanalytics_textsummarization_spark.text import (
+        lsa_sentences,
+        tokens_lsa,
     )
 
-    tfidf = _tfidf_long(spark, SF_DIR)
+    toks, lsa_sent = tokens_lsa(spark, SF_DIR), lsa_sentences(spark, SF_DIR)
     sizes = (
-        tfidf.groupBy("source")
+        toks.groupBy("source")
         .agg(
             (
                 F.countDistinct("sentence_id") * F.countDistinct("word")
@@ -173,12 +181,14 @@ def test_size_dispatch_mixed_split(spark):
     )
     lo, hi = sizes[0], sizes[-1]
     assert lo["cells"] < hi["cells"], "need two differently-sized sources"
-    sub = tfidf.filter(
+    sub = toks.filter(
         F.col("source").isin([lo["source"], hi["source"]])
     ).persist()
     cut = (lo["cells"] + hi["cells"]) // 2
-    mixed = lsa_concepts_auto_from(spark, sub, max_cells=cut).toPandas()
-    local = lsa_concepts_from(sub).toPandas()
+    mixed = lsa_concepts_auto_from(
+        spark, sub, lsa_sent, max_cells=cut
+    ).toPandas()
+    local = lsa_concepts_from_tokens(sub, lsa_sent).toPandas()
     key = ["source", "concept", "kind", "rk"]
     a = local.sort_values(key).reset_index(drop=True)
     b = mixed.sort_values(key).reset_index(drop=True)

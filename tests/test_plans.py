@@ -10,6 +10,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 from tests.conftest import SF_DIR
+from tests.test_reviews_pipeline import reviews_dir  # noqa: F401 (fixture)
 
 QUERIES = entry_mod.queries()
 
@@ -650,3 +651,23 @@ def test_tokenizer_construction_stays_off_py4j(spark):
 def test_session_codegen_cache_holds_a_review_pass(spark):
     # a cold review summarization pass compiles ~80 whole-stage classes
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 1000
+
+
+def test_review_rouge_sweep_tokenizes_once_per_summarizer(spark, reviews_dir):  # noqa: F811
+    """The paper's headline review job, scored end to end: its final
+    adaptive plan runs one scan + tokenize pipeline per summarizer (LSA's
+    kernel computes its TF-IDF from the token stream it is given) and
+    caches nothing."""
+    from bigdataanalytics_textsummarization_spark.functions import release_pins
+    from bigdataanalytics_textsummarization_spark.reviews import review_rouge_sweep
+
+    df = review_rouge_sweep(spark, reviews_dir)
+    try:
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        release_pins()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert "InMemoryRelation" not in final
+    assert final.count("explode(regexp_extract_all") == 2
